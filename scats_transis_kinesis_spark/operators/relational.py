@@ -97,12 +97,12 @@ def sessionize(
     streaming/pipeline.py.)
     """
     w = W.partitionBy(key).orderBy(ts)
-    gap_s = gap_minutes * 60
+    # Compare exact times (either timestamp type): unix_timestamp would
+    # truncate to whole seconds, so a 1800.5 s gap would not split.
+    gap = F.expr(f"INTERVAL {gap_minutes} MINUTES")
     is_new = (
         F.when(F.lag(ts).over(w).isNull(), 1)
-        .when(
-            F.unix_timestamp(ts) - F.unix_timestamp(F.lag(ts).over(w)) > gap_s, 1
-        )
+        .when(F.col(ts) > F.lag(ts).over(w) + gap, 1)
         .otherwise(0)
     )
     return df.withColumn("session_seq", F.sum(is_new).over(

@@ -669,10 +669,10 @@ def resample_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def try_cast_dirty_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     lead = F.split("text", " ").getItem(0)
-    parsed = F.try_cast(lead, "int") if hasattr(F, "try_cast") else F.expr(
-        "try_cast(split(text, ' ')[0] AS INT)"
+    parsed = F.when(
+        lead.rlike(r"\A[+-]?[0-9]+\z"),
+        F.expr("try_cast(split(text, ' ')[0] AS INT)"),
     )
-    parsed = F.when(lead.rlike(r"\A[+-]?[0-9]+\z"), parsed)
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.count(parsed).alias("n_numeric_leads"),

@@ -472,32 +472,28 @@ def fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   the old join emitted those as duplicate occurrences and
     #   dropDuplicates paid for them),
     # - u < v candidate pairs come from chained posexplode/slice
-    #   generators (no join, no second exchange) PACKED into one long
-    #   (custkeys fit 32 bits at any TPC-H SF), so the dedup exchange
-    #   carries 8 bytes per occurrence instead of two ids + two names,
+    #   generators (no join, no second exchange) and dedup on the two
+    #   id columns, so the dedup exchange carries two longs per
+    #   occurrence instead of two ids + two names (no packing into one
+    #   long: custkeys pass 2^32 above SF ~28.6k),
     # - names re-attach AFTER the dedup via two equi-joins against the
     #   customer projection (AQE broadcasts them at gate scale; at
-    #   100 TB they are key-joins on the已-deduped narrow pair frame —
-    #   names cross the network once, not once per occurrence).
+    #   100 TB they are key-joins on the already-deduped narrow pair
+    #   frame — names cross the network once, not once per occurrence).
     # Pair multiset is identical: distinct u < v pairs sharing >= 1
     # block key either way; the all-pairs oracle pins it.
     blocks = variants.groupBy("block").agg(
         F.sort_array(F.collect_set("id")).alias("ids")
     )
-    pairs = (
-        blocks.select("ids", F.posexplode("ids").alias("i", "a"))
+    cand = (
+        blocks.select("ids", F.posexplode("ids").alias("i", "id_a"))
         .select(
-            "a",
+            "id_a",
             F.explode(
                 F.expr("slice(ids, i + 2, size(ids) - i - 1)")
-            ).alias("b"),
+            ).alias("id_b"),
         )
-        .select(F.shiftleft(F.col("a"), 32).bitwiseOR(F.col("b")).alias("uv"))
         .distinct()
-    )
-    cand = pairs.select(
-        F.shiftrightunsigned(F.col("uv"), 32).alias("id_a"),
-        F.col("uv").bitwiseAND(F.lit(0xFFFFFFFF)).alias("id_b"),
     )
     return (
         cand.join(

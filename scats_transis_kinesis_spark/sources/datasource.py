@@ -25,16 +25,26 @@ a native Spark surface instead of a driver-side loop:
   and the bounded, reset-on-data reconnect budget of
   transis_consumer.py:141-148.
 
+The same source writes, too: ``df.write`` / ``writeStream
+.format("transis_xml")`` stage NUL-terminated capture files and rename
+them into place on commit, so written output reads back through the
+readers above.  Every path shares one codec — :func:`_split_docs` to
+read, :func:`_write_docs` to write.
+
 Rows are ``value: string`` — one XML document per row, undecoded.
 Parsing stays in ``sources/xml.py`` (S3), so the source composes with
-the existing pipeline operators unchanged.
+the existing pipeline operators unchanged.  Option keys are read in
+lower case: Spark hands a DataSource its options as a case-insensitive
+map with lower-cased keys.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-from typing import Iterator
+import uuid
+from itertools import islice
+from typing import Iterable, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -52,15 +62,43 @@ RECORD_DELIMITER = b"\x00"  # reference: transis_consumer.py:133
 SCHEMA = StructType([StructField("value", StringType(), True)])
 
 
-def _split_file(path: str) -> Iterator[tuple[str]]:
-    """Split one capture file into documents on the NUL delimiter,
-    dropping empty fragments (reference keeps the same guard,
-    transis_consumer.py:137-138)."""
-    with open(path, "rb") as f:
-        data = f.read()
+def _split_docs(data: bytes) -> Iterator[str]:
+    """Split NUL-delimited bytes into decoded documents, dropping empty
+    fragments (reference keeps the same guard,
+    transis_consumer.py:137-138).  Lazy: one document is decoded at a
+    time."""
     for doc in data.split(RECORD_DELIMITER):
         if doc:
-            yield (doc.decode("utf-8"),)
+            yield doc.decode("utf-8")
+
+
+def _write_docs(f, docs: Iterable[str]) -> int:
+    """Write each document followed by NUL; returns how many."""
+    n = 0
+    for doc in docs:
+        f.write(doc.encode("utf-8"))
+        f.write(RECORD_DELIMITER)
+        n += 1
+    return n
+
+
+def _split_file(path: str) -> Iterator[tuple[str]]:
+    """One capture file as ``(document,)`` rows."""
+    with open(path, "rb") as f:
+        data = f.read()
+    for doc in _split_docs(data):
+        yield (doc,)
+
+
+def _positive_int(options, key: str) -> int | None:
+    """An optional integer option that must be ``>= 1`` when set."""
+    value = options.get(key.lower())
+    if not value:
+        return None
+    n = int(value)
+    if n < 1:
+        raise ValueError(f"transis_xml: {key} must be >= 1")
+    return n
 
 
 class _FilePartition(InputPartition):
@@ -110,12 +148,7 @@ class TransisXMLStreamReader(SimpleDataSourceStreamReader):
         # micro-batch consumes (same contract as the file source's
         # maxFilesPerTrigger).  Unset = consume everything available,
         # the reference's drain-the-stream behavior.
-        max_files = options.get("maxfilespertrigger") or options.get(
-            "maxFilesPerTrigger"
-        )
-        self.max_files = int(max_files) if max_files else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError("transis_xml: maxFilesPerTrigger must be >= 1")
+        self.max_files = _positive_int(options, "maxFilesPerTrigger")
 
     def initialOffset(self) -> dict:
         return {"n_files": 0}
@@ -123,9 +156,7 @@ class TransisXMLStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict) -> tuple[Iterator[tuple[str]], dict]:
         files = _list_captures(self.path)
         consumed = start["n_files"]
-        new = files[consumed:]
-        if self.max_files is not None:
-            new = new[: self.max_files]
+        new = files[consumed:][: self.max_files]
         rows = [row for p in new for row in _split_file(p)]
         return iter(rows), {"n_files": consumed + len(new)}
 
@@ -185,16 +216,12 @@ class LiveStreamConsumer:
                     self._buffer += chunk
                     if RECORD_DELIMITER not in chunk:
                         continue
-                    *complete, self._buffer = self._buffer.split(
+                    complete, _, self._buffer = self._buffer.rpartition(
                         RECORD_DELIMITER
                     )
-                    delivered = False
-                    for doc in complete:
-                        if doc:  # drop empty fragments, as the reference does
-                            delivered = True
-                            yield doc.decode("utf-8")
-                    if delivered:
+                    for doc in _split_docs(complete):
                         self._attempts_remaining = self._max_reconnects
+                        yield doc
                 return  # clean end of stream; a trailing partial doc
                 # (no NUL yet) is never yielded — reference behavior
             except ConnectionError:
@@ -283,38 +310,18 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("transis_xml: option 'transport' is required")
         self.spec = spec
         self.max_reconnects = int(
-            options.get("maxreconnects")
-            or options.get("maxReconnects")
-            or DEFAULT_MAX_RECONNECTS
+            options.get("maxreconnects") or DEFAULT_MAX_RECONNECTS
         )
-        max_docs = options.get("maxdocspertrigger") or options.get(
-            "maxDocsPerTrigger"
-        )
-        self.max_docs = int(max_docs) if max_docs else None
-        if self.max_docs is not None and self.max_docs < 1:
-            raise ValueError("transis_xml: maxDocsPerTrigger must be >= 1")
-        self.poll_timeout_s = (
-            int(
-                options.get("polltimeoutms")
-                or options.get("pollTimeoutMs")
-                or 500
-            )
-            / 1000.0
-        )
+        self.max_docs = _positive_int(options, "maxDocsPerTrigger")
+        self.poll_timeout_s = int(options.get("polltimeoutms") or 500) / 1000.0
         # Backpressure bound for the pump queue: a producer faster than
         # the trigger drain rate blocks on put() instead of growing
         # driver memory without bound.  Default: a few triggers' worth
         # when maxDocsPerTrigger is set, else a fixed cap.
-        max_buffered = options.get("maxbuffereddocs") or options.get(
-            "maxBufferedDocs"
+        self.max_buffered = _positive_int(options, "maxBufferedDocs") or (
+            4 * self.max_docs if self.max_docs else 10_000
         )
-        if max_buffered:
-            self.max_buffered = int(max_buffered)
-            if self.max_buffered < 1:
-                raise ValueError("transis_xml: maxBufferedDocs must be >= 1")
-        else:
-            self.max_buffered = 4 * self.max_docs if self.max_docs else 10_000
-        self.spool_dir = options.get("spooldir") or options.get("spoolDir")
+        self.spool_dir = options.get("spooldir")
         _resolve_transport(spec)  # fail fast on a bad spec
         self._pump = None  # background consumer, started on first read
 
@@ -371,39 +378,19 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
         import time as _time
 
         start_off = start["n_docs"]
-        rows: list[tuple[str]] = []
-        budget = self.max_docs
         # REPLAY-FIRST: any journaled documents at or past `start` were
         # consumed from the transport by a previous instance whose batch
         # never reached Spark's offset log (crash between the spool
         # write and the offset commit).  A live socket cannot re-deliver
         # them — the journal is their only copy — so they form the head
         # of this batch instead of being discarded.
-        if self.spool_dir:
-            for f_lo, _f_hi, path in self._spool_files():
-                if _f_hi <= start_off:
-                    continue
-                if budget is not None and budget <= 0:
-                    break
-                with open(path, "rb") as f:
-                    docs = f.read().split(RECORD_DELIMITER)[:-1]
-                for i, doc in enumerate(docs):
-                    off = f_lo + i
-                    if off < start_off:
-                        continue
-                    if budget is not None and budget <= 0:
-                        break
-                    rows.append((doc.decode("utf-8"),))
-                    if budget is not None:
-                        budget -= 1
+        rows = [(doc,) for _, doc in islice(self._journal(start_off), self.max_docs)]
         n_replayed = len(rows)
         pump = self._ensure_pump()
         deadline = _time.monotonic() + self.poll_timeout_s
-        while budget is None or budget > 0:
+        while self.max_docs is None or len(rows) < self.max_docs:
             try:
                 rows.append((pump["queue"].get_nowait(),))
-                if budget is not None:
-                    budget -= 1
                 continue
             except _queue.Empty:
                 pass
@@ -449,9 +436,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
         )
         tmp = path + ".tmp"
         with open(tmp, "wb") as f:
-            for (doc,) in rows:
-                f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
+            _write_docs(f, (doc for (doc,) in rows))
         os.replace(tmp, path)
 
     def _spool_files(self) -> list[tuple[int, int, str]]:
@@ -465,6 +450,22 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
             out.append((int(lo), int(hi), os.path.join(self.spool_dir, name)))
         return out
 
+    def _journal(self, lo: int, hi: int | None = None) -> Iterator[tuple[int, str]]:
+        """``(offset, document)`` for every journaled document in
+        ``[lo, hi)`` (``hi=None``: to the journal's end), in offset
+        order.  Journal files never hold an empty document —
+        ``LiveStreamConsumer`` drops empty fragments before they reach
+        ``_spool_write`` — so ``_split_docs`` dropping empties keeps
+        each file's i-th document at offset ``f_lo + i``."""
+        for f_lo, f_hi, path in self._spool_files():
+            if f_hi <= lo or (hi is not None and f_lo >= hi):
+                continue
+            with open(path, "rb") as f:
+                data = f.read()
+            for off, doc in enumerate(_split_docs(data), f_lo):
+                if off >= lo and (hi is None or off < hi):
+                    yield off, doc
+
     def readBetweenOffsets(self, start: dict, end: dict):
         lo, hi = start["n_docs"], end["n_docs"]
         if lo >= hi:
@@ -477,19 +478,10 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
                 "journals delivered documents for exact replay."
             )
         rows: list[tuple[str]] = []
-        expected = lo
-        for f_lo, f_hi, path in self._spool_files():
-            if f_hi <= lo or f_lo >= hi:
-                continue
-            with open(path, "rb") as f:
-                docs = f.read().split(RECORD_DELIMITER)[:-1]
-            for i, doc in enumerate(docs):
-                off = f_lo + i
-                if lo <= off < hi:
-                    if off != expected:
-                        break  # gap — fail below with a precise message
-                    rows.append((doc.decode("utf-8"),))
-                    expected += 1
+        for off, doc in self._journal(lo, hi):
+            if off == lo + len(rows):  # a gap fails below
+                rows.append((doc,))
+        expected = lo + len(rows)
         if expected != hi:
             raise RuntimeError(
                 f"transis_xml: spool {self.spool_dir} cannot replay "
@@ -520,34 +512,70 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
                 pass  # best-effort GC; an undeleted file stays correct
 
 
-class _WriteCommit(WriterCommitMessage):
-    def __init__(self, staged: str, final: str) -> None:
+class _Staged(WriterCommitMessage):
+    """One task's staged capture file (``""`` when the partition had no
+    documents) and the partition it belongs to."""
+
+    def __init__(self, staged: str, pid: int) -> None:
         self.staged = staged
-        self.final = final
+        self.pid = pid
+
+
+def _stage(path: str, iterator, name: str) -> _Staged:
+    """Executor half of both writers' two-phase commit: write the
+    partition's non-null documents as one NUL-terminated file under the
+    hidden ``path/_staging`` subdirectory (the readers list regular
+    files of ``path`` only, so staged or leaked files are invisible to
+    batch scans and to the streaming offset log)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else 0
+    # Stage under the task ATTEMPT id, not the worker pid: a retried or
+    # speculative attempt of the same partition can land on the same
+    # reused Python worker process, and a pid-keyed name would let the
+    # two attempts interleave writes into one staged file and commit a
+    # corrupt capture.  Attempt ids are unique per attempt by contract;
+    # uuid covers the no-TaskContext case.
+    attempt = f"a{ctx.taskAttemptId()}" if ctx else f"u{uuid.uuid4().hex[:12]}"
+    staging_dir = os.path.join(path, "_staging")
+    os.makedirs(staging_dir, exist_ok=True)
+    staged = os.path.join(staging_dir, f"{name}-{pid:05d}.{attempt}.tmp")
+    with open(staged, "wb") as f:
+        n = _write_docs(f, (row[0] for row in iterator if row[0] is not None))
+    if n == 0:
+        os.remove(staged)
+        return _Staged("", pid)
+    return _Staged(staged, pid)
+
+
+def _discard(messages) -> None:
+    """Remove the staged files of an aborted job (failed tasks report
+    ``None``)."""
+    for m in messages:
+        if getattr(m, "staged", ""):
+            try:
+                os.remove(m.staged)
+            except OSError:
+                pass
 
 
 class TransisXMLBatchWriter(DataSourceWriter):
     """Batch write path: each partition renders its rows as one
     NUL-delimited capture file (the reference's wire format, so a
-    written directory reads back through the same source —
-    ``_split_file`` drops the trailing empty fragment).
+    written directory reads back through the same source).
 
-    Two-phase commit: executors write into a hidden ``_staging``
-    SUBDIRECTORY (the reader's capture listing takes regular files
-    only, so in-flight or leaked staging files are invisible to reads
-    and to the streaming offset log); the driver renames the staged
-    set into place (and, for overwrite, clears prior captures) only
-    after EVERY task succeeded — a failed/aborted job leaves the
-    target untouched.  Final names carry a per-JOB unique token, so
-    append mode never collides with the capture files of a previous
-    write (deterministic ``part-00000`` names would silently clobber
-    them).  On a local filesystem the rename is atomic; an
-    object-store deployment swaps this for a manifest commit, the
-    same contract every file sink uses."""
+    Two-phase commit: executors stage (:func:`_stage`); the driver
+    renames the staged set into place (and, for overwrite, clears prior
+    captures) only after EVERY task succeeded — a failed/aborted job
+    leaves the target untouched.  Final names carry a per-JOB unique
+    token, so append mode never collides with the capture files of a
+    previous write (deterministic ``part-00000`` names would silently
+    clobber them).  On a local filesystem the rename is atomic; an
+    object-store deployment swaps this for a manifest commit, the same
+    contract every file sink uses."""
 
     def __init__(self, options, overwrite: bool) -> None:
-        import uuid
-
         path = options.get("path")
         if not path:
             raise ValueError("transis_xml write needs a 'path' option")
@@ -558,41 +586,8 @@ class TransisXMLBatchWriter(DataSourceWriter):
         # jobs never share a name.
         self.job_token = uuid.uuid4().hex[:12]
 
-    def write(self, iterator) -> "_WriteCommit":
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        staging_dir = os.path.join(self.path, "_staging")
-        os.makedirs(staging_dir, exist_ok=True)
-        name = f"part-{self.job_token}-{pid:05d}.xml0"
-        final = os.path.join(self.path, name)
-        # Stage under the task ATTEMPT id, not the worker pid: a retried
-        # or speculative attempt of the same partition can land on the
-        # same reused Python worker process, and a pid-keyed name would
-        # let the two attempts interleave writes into one staged file
-        # and commit a corrupt capture.  Attempt ids are unique per
-        # attempt by contract; uuid covers the no-TaskContext case.
-        if ctx is not None:
-            attempt = f"a{ctx.taskAttemptId()}"
-        else:
-            import uuid
-
-            attempt = f"u{uuid.uuid4().hex[:12]}"
-        staged = os.path.join(staging_dir, f"{name}.{attempt}.tmp")
-        n = 0
-        with open(staged, "wb") as f:
-            for row in iterator:
-                doc = row[0]
-                if doc is None:
-                    continue
-                f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
-                n += 1
-        if n == 0:
-            os.remove(staged)
-            return _WriteCommit("", "")
-        return _WriteCommit(staged, final)
+    def write(self, iterator) -> _Staged:
+        return _stage(self.path, iterator, f"part-{self.job_token}")
 
     def commit(self, messages) -> None:
         if self.overwrite:
@@ -601,16 +596,12 @@ class TransisXMLBatchWriter(DataSourceWriter):
                     os.remove(os.path.join(self.path, name))
         for m in messages:
             if m.staged:
-                os.replace(m.staged, m.final)
+                final = f"part-{self.job_token}-{m.pid:05d}.xml0"
+                os.replace(m.staged, os.path.join(self.path, final))
         self._gc_staging()
 
     def abort(self, messages) -> None:
-        for m in messages:
-            if m and getattr(m, "staged", ""):
-                try:
-                    os.remove(m.staged)
-                except OSError:
-                    pass
+        _discard(messages)
         self._gc_staging()
 
     def _gc_staging(self) -> None:
@@ -631,12 +622,6 @@ class TransisXMLBatchWriter(DataSourceWriter):
             pass
 
 
-class _StreamWriteCommit(WriterCommitMessage):
-    def __init__(self, staged: str, pid: int) -> None:
-        self.staged = staged
-        self.pid = pid
-
-
 class TransisXMLStreamWriter(DataSourceStreamWriter):
     """Streaming write path (``writeStream.format("transis_xml")``):
     each micro-batch lands as one NUL-delimited capture file per
@@ -648,15 +633,11 @@ class TransisXMLStreamWriter(DataSourceStreamWriter):
     the reason the final name cannot carry a random token like the
     batch writer's.
 
-    Executors stage under the hidden ``_staging`` subdirectory (the
-    readers list regular files of the target dir only, so staged or
-    leaked files are invisible to batch scans and to the streaming
-    offset log) with attempt-unique names; the driver renames the
-    batch's staged set into place only in ``commit``, when every task
-    of the micro-batch has succeeded.  A task that dies mid-write can
-    leak its attempt file in ``_staging`` — harmless to readers and
-    overwritten-adjacent, the usual file-sink trade without a
-    manifest."""
+    Executors stage (:func:`_stage`); the driver renames the batch's
+    staged set into place only in ``commit``, when every task of the
+    micro-batch has succeeded.  A task that dies mid-write can leak its
+    attempt file in ``_staging`` — harmless to readers, the usual
+    file-sink trade without a manifest."""
 
     def __init__(self, options) -> None:
         path = options.get("path")
@@ -664,49 +645,17 @@ class TransisXMLStreamWriter(DataSourceStreamWriter):
             raise ValueError("transis_xml stream write needs a 'path' option")
         self.path = path
 
-    def write(self, iterator) -> "_StreamWriteCommit":
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        staging_dir = os.path.join(self.path, "_staging")
-        os.makedirs(staging_dir, exist_ok=True)
-        if ctx is not None:
-            attempt = f"a{ctx.taskAttemptId()}"
-        else:
-            import uuid
-
-            attempt = f"u{uuid.uuid4().hex[:12]}"
-        staged = os.path.join(staging_dir, f"stream-{pid:05d}.{attempt}.tmp")
-        n = 0
-        with open(staged, "wb") as f:
-            for row in iterator:
-                doc = row[0]
-                if doc is None:
-                    continue
-                f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
-                n += 1
-        if n == 0:
-            os.remove(staged)
-            return _StreamWriteCommit("", -1)
-        return _StreamWriteCommit(staged, pid)
+    def write(self, iterator) -> _Staged:
+        return _stage(self.path, iterator, "stream")
 
     def commit(self, messages, batchId: int) -> None:
         for m in messages:
             if m and m.staged:
-                final = os.path.join(
-                    self.path, f"part-b{batchId:010d}-{m.pid:05d}.xml0"
-                )
-                os.replace(m.staged, final)
+                final = f"part-b{batchId:010d}-{m.pid:05d}.xml0"
+                os.replace(m.staged, os.path.join(self.path, final))
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m and getattr(m, "staged", ""):
-                try:
-                    os.remove(m.staged)
-                except OSError:
-                    pass
+        _discard(messages)
 
 
 class TransisXMLDataSource(DataSource):

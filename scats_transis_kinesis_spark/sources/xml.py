@@ -8,9 +8,8 @@ Here:
 - S2 tokenizing = the text source's ``lineSep`` option (splitting happens
   in the scan, vectorized, parallel per file split), or
   ``split + explode`` when documents arrive pre-batched in a column.
-- S3 parsing = ``from_xml`` against the explicit response schema when the
-  running Spark exposes it (Spark 4 built-in); otherwise an Arrow-batched
-  ``mapInPandas`` fallback using ElementTree per batch (not per row).
+- S3 parsing = the built-in ``from_xml`` against the explicit response
+  schema — one JVM-side, codegen'd expression, no Python parser.
 
 Semantics preserved (SURVEY.md §1.4): empty ``DetectorCountMessages``
 containers → NULL, malformed ``Detector`` children dropped, ``error``
@@ -19,12 +18,8 @@ attribute carried through for the fail-stop assert.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .. import schemas
 
 NULL_DELIM = "\x00"
 
@@ -73,19 +68,10 @@ TRANSIS_XML_SCHEMA = (
 
 
 def parse_transis_documents(docs: DataFrame, column: str = "value") -> DataFrame:
-    """S3 — XML document text → typed ``TRANSIS_RESPONSE`` rows.
-
-    Prefers the built-in ``from_xml`` expression (JVM-side, codegen'd —
-    the 100 TB path); falls back to an Arrow-batched ``mapInPandas``
-    ElementTree parser on Spark builds without XML support.  Both paths
-    emit the same explicit schema, so downstream operators never depend
-    on the parser choice.
-    """
-    try:
-        parsed = docs.select(F.from_xml(F.col(column), TRANSIS_XML_SCHEMA).alias("r"))
-        parsed.schema  # proves from_xml resolved on this Spark build
-    except Exception:
-        return _parse_with_elementtree(docs, column)
+    """S3 — XML document text → typed ``TRANSIS_RESPONSE`` rows through
+    the built-in ``from_xml`` expression (JVM-side, codegen'd — the
+    100 TB path).  A schema or analysis error raises."""
+    parsed = docs.select(F.from_xml(F.col(column), TRANSIS_XML_SCHEMA).alias("r"))
     messages = F.transform(
         F.col("r.DetectorCountMessages.DetectorCountMessage"),
         lambda m: F.struct(
@@ -104,57 +90,6 @@ def parse_transis_documents(docs: DataFrame, column: str = "value") -> DataFrame
         messages.alias("messages"),
         F.lit(None).cast("string").alias("response_received_ts"),
     )
-
-
-def _parse_with_elementtree(docs: DataFrame, column: str) -> DataFrame:
-    """Arrow-batched fallback parser. One python task per input batch —
-    the parse parallelizes across partitions, not rows."""
-    import pandas as pd
-
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import xml.etree.ElementTree as ET
-
-        for pdf in batches:
-            rows = []
-            for raw in pdf[column]:
-                try:
-                    root = ET.fromstring(raw)
-                except ET.ParseError:
-                    rows.append({"error": "true", "error_msg": "parse error",
-                                 "messages": None, "response_received_ts": None})
-                    continue
-                err = root.attrib.get("error")
-                err_msg = None
-                errors = root.find("Errors")
-                # ElementTree truthiness: empty container == absent
-                # (reference: transis_response_models.py:296-301,312-317).
-                if errors is not None and len(errors):
-                    err_msg = errors[0].attrib.get("msg")
-                dcm = root.find("DetectorCountMessages")
-                messages = None
-                if dcm is not None and len(dcm):
-                    messages = []
-                    for m in dcm:
-                        dets = m.find("Detectors")
-                        children = None
-                        if dets is not None and len(dets):
-                            children = [
-                                {"Did": d.attrib.get("Did"), "count": d.attrib.get("count")}
-                                for d in dets
-                            ]
-                        messages.append(
-                            {
-                                "reg": m.attrib.get("reg"),
-                                "Sid": m.attrib.get("Sid"),
-                                "date": m.attrib.get("date"),
-                                "detectors": children,
-                            }
-                        )
-                rows.append({"error": err, "error_msg": err_msg,
-                             "messages": messages, "response_received_ts": None})
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(parse_batch, schema=schemas.TRANSIS_RESPONSE)
 
 
 # from_xml schema for a topology <TransisResponse> carrying SiteLayouts

@@ -32,9 +32,9 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-THROTTLE_ERROR = "ProvisionedThroughputExceededException"
+from ..operators.envelope import THROTTLE_ERROR, to_kinesis_envelope
+
 DEFAULT_BATCH_SIZE = 10
 RETRY_BACKOFF_S = 2.0
 
@@ -184,8 +184,6 @@ class KinesisBatchWriter:
         kinesis_producer.py:75-77; SURVEY.md §7.4.)"""
         if self._already_committed(batch_id):
             return
-        from ..operators.envelope import to_kinesis_envelope
-
         enveloped = to_kinesis_envelope(
             batch_df, partition_key_col=self.partition_key_col, literal_key=self.literal_key
         )

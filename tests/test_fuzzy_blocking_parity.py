@@ -80,3 +80,43 @@ def test_deletion_blocking_is_lossless_for_lev1(spark, tmp_path):
         for r in customer_match_pairs(spark, str(tmp_path)).collect()
     }
     assert got == expect
+
+
+def test_fuzzy_match_blocked_ids_past_2_pow_32(spark, tmp_path):
+    """``fuzzy_match_blocked`` keeps pairs whose custkeys do not fit 32
+    bits (TPC-H custkeys pass 2^32 above SF ~28.6k): ids straddling the
+    boundary, names within edit distance 1, against all pairs."""
+    big = 1 << 32
+    rows = [
+        (big - 1, "smith"),
+        (big, "smyth"),
+        (big + 1, "smit"),
+        (2 * big + 5, "smiths"),
+        (3 * big, "jones"),
+        (7, "jone"),
+        (big + 9, "brown"),
+        (5 * big + 3, "brawn"),
+    ]
+    spark.createDataFrame(
+        [(i, nm, 1, 0.0, "BUILDING") for i, nm in rows],
+        "c_custkey long, c_name string, c_nationkey long, "
+        "c_acctbal double, c_mktsegment string",
+    ).write.parquet(f"{tmp_path}/customer.parquet")
+
+    expect = {
+        (min(a[0], b[0]), max(a[0], b[0]), int(a[1] != b[1]))
+        for i, a in enumerate(rows)
+        for b in rows[i + 1 :]
+        if _lev1(a[1], b[1])
+    }
+    assert len(expect) >= 4 and any(a >= big and b >= big for a, b, _ in expect)
+
+    from scats_transis_kinesis_spark.plans.coverage_queries import (
+        fuzzy_match_blocked,
+    )
+
+    got = {
+        (r["id_a"], r["id_b"], r["edit_dist"])
+        for r in fuzzy_match_blocked(spark, str(tmp_path)).collect()
+    }
+    assert got == expect

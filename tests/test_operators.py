@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from scats_transis_kinesis_spark.functions.timestamps import (
@@ -192,6 +194,21 @@ def test_sessionize_gap(spark):
         (1, 3060.0, 2),
         (2, 0.0, 1),
     }
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_sessionize_gap_is_exact_below_one_second(spark, ts_type):
+    # A 1800.5 s gap exceeds the 30-minute gap; exactly 1800 s does not.
+    df = spark.createDataFrame(
+        [(1, 0), (1, 1_800_500_000), (2, 0), (2, 1_800_000_000)],
+        "user_id int, us long",
+    ).select("user_id", F.timestamp_micros("us").cast(ts_type).alias("ts"))
+    out = sessionize(df, key="user_id", ts="ts", gap_minutes=30)
+    n_sessions = {
+        r["user_id"]: r["n"]
+        for r in out.groupBy("user_id").agg(F.max("session_seq").alias("n")).collect()
+    }
+    assert n_sessions == {1: 2, 2: 1}
 
 
 def test_quote_all_csv_roundtrip(spark, tmp_path):

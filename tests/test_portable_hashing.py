@@ -92,10 +92,64 @@ def test_epoch_conversion_fixed_points(spark, iso, epoch):
 
 
 # --- XML parser-path equivalence ------------------------------------------
-# parse_transis_documents has two implementations (JVM from_xml and the
-# Arrow ElementTree fallback); they must emit identical rows for any
-# document, or a Spark build without XML support silently changes
-# semantics.
+# parse_transis_documents (the JVM from_xml expression) must emit the
+# rows an ElementTree reading of the same document gives — the
+# reference's own parser (transis_response_models.py:288-312), with its
+# truthiness rule that an empty container equals an absent one.
+
+
+def _parse_with_elementtree(docs, column):
+    """Reference parser: Arrow-batched ElementTree over ``mapInPandas``,
+    emitting the ``TRANSIS_RESPONSE`` schema."""
+    import pandas as pd
+
+    from scats_transis_kinesis_spark import schemas
+
+    def parse_batch(batches):
+        import xml.etree.ElementTree as ET
+
+        for pdf in batches:
+            rows = []
+            for raw in pdf[column]:
+                try:
+                    root = ET.fromstring(raw)
+                except ET.ParseError:
+                    rows.append({"error": "true", "error_msg": "parse error",
+                                 "messages": None, "response_received_ts": None})
+                    continue
+                err = root.attrib.get("error")
+                err_msg = None
+                errors = root.find("Errors")
+                # ElementTree truthiness: empty container == absent
+                # (reference: transis_response_models.py:296-301,312-317).
+                if errors is not None and len(errors):
+                    err_msg = errors[0].attrib.get("msg")
+                dcm = root.find("DetectorCountMessages")
+                messages = None
+                if dcm is not None and len(dcm):
+                    messages = []
+                    for m in dcm:
+                        dets = m.find("Detectors")
+                        children = None
+                        if dets is not None and len(dets):
+                            children = [
+                                {"Did": d.attrib.get("Did"), "count": d.attrib.get("count")}
+                                for d in dets
+                            ]
+                        messages.append(
+                            {
+                                "reg": m.attrib.get("reg"),
+                                "Sid": m.attrib.get("Sid"),
+                                "date": m.attrib.get("date"),
+                                "detectors": children,
+                            }
+                        )
+                rows.append({"error": err, "error_msg": err_msg,
+                             "messages": messages, "response_received_ts": None})
+            yield pd.DataFrame(rows)
+
+    return docs.mapInPandas(parse_batch, schema=schemas.TRANSIS_RESPONSE)
+
 
 SITE_ID = st.integers(min_value=0, max_value=99999)
 COUNT = st.one_of(st.none(), st.integers(min_value=0, max_value=500))
@@ -124,10 +178,7 @@ def transis_doc(draw):
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(transis_doc(), min_size=1, max_size=4))
 def test_xml_parser_paths_agree(spark, docs):
-    from scats_transis_kinesis_spark.sources.xml import (
-        _parse_with_elementtree,
-        parse_transis_documents,
-    )
+    from scats_transis_kinesis_spark.sources.xml import parse_transis_documents
 
     df = spark.createDataFrame([(d,) for d in docs], "value string")
 
