@@ -886,40 +886,14 @@ def connected_components(
     return children.union(roots)
 
 
-# Sign-LSH banding scheme for persisted embedding-dedup state
-# (incremental_embedding_dedup): bands × bits-per-band over basis-
-# hyperplane sign bits, mirroring the batch dedup_embedding_lsh query.
-# The version stamp covers the banding scheme AND the vector space —
-# bump on any change (band layout, and ESPECIALLY the embedding model:
-# vectors from different encoders are not comparable, so mixing them
-# in one state table silently stops catching near-dups).
-EMB_LSH_BANDS = 4
-EMB_LSH_BITS = 8
+# Version stamp of persisted embedding-dedup state
+# (incremental_embedding_dedup).  The banding is similarity.LSH_BANDS x
+# LSH_BITS — the same sign-LSH layout as the batch dedup_embedding_lsh
+# query — and changing either one requires bumping this version.  The
+# stamp also covers the vector space: bump on any change of the
+# embedding model (vectors from different encoders are not comparable,
+# so mixing them in one state table silently stops catching near-dups).
 EMB_STATE_VERSION = 1
-
-
-def _emb_banded(vecs: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, band, bucket) rows: bucket = packed sign bits of dims
-    [band·BITS, (band+1)·BITS) — sign random projection with basis
-    hyperplanes (Charikar '02), identical to dedup_embedding_lsh."""
-    def bucket_for(band: int):
-        b = F.lit(0)
-        for d in range(EMB_LSH_BITS):
-            b = b + F.when(
-                F.element_at("v", band * EMB_LSH_BITS + d + 1) > 0,
-                F.lit(1 << d),
-            ).otherwise(0)
-        return b
-
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), bucket_for(b).alias("bucket"))
-            for b in range(EMB_LSH_BANDS)
-        ]
-    )
-    return vecs.select(id_col, F.explode(bands).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
 
 
 def incremental_embedding_dedup(
@@ -959,11 +933,7 @@ def incremental_embedding_dedup(
     every near-dup through.
 
     Returns the surviving ``(id, v)`` rows (v = double vector)."""
-    # Norms hoisted to per-row columns before the verify joins
-    # (round-10, similarity.cosine_with_norms): the interpreted norm
-    # fold runs once per ROW instead of once per candidate pair per
-    # side; bit-identical.
-    from .similarity import _norm, cosine_with_norms
+    from .similarity import pair_cosine, sign_lsh_buckets, sign_lsh_pairs
 
     spark = new_vecs.sparkSession
     vecs = (
@@ -996,44 +966,20 @@ def incremental_embedding_dedup(
                 f"{EMB_STATE_VERSION} — rebuild it"
             )
         cand = (
-            _emb_banded(survivors, id_col)
-            .alias("n")
+            sign_lsh_buckets(survivors, id_col=id_col)
+            .withColumnRenamed(id_col, "new_id")
             .join(
-                _emb_banded(seen, id_col).alias("h"),
+                sign_lsh_buckets(seen, id_col=id_col).withColumnRenamed(
+                    id_col, "hist_id"
+                ),
                 ["band", "bucket"],
             )
-            .select(
-                F.col(f"n.{id_col}").alias("new_id"),
-                F.col(f"h.{id_col}").alias("hist_id"),
-            )
+            .select("new_id", "hist_id")
             .distinct()
         )
         dup_vs_history = (
-            cand.join(
-                survivors.select(
-                    F.col(id_col).alias("new_id"),
-                    F.col("v").alias("nv"),
-                    _norm(F.col("v")).alias("_nn"),
-                ),
-                "new_id",
-            )
-            .join(
-                seen.select(
-                    F.col(id_col).alias("hist_id"),
-                    F.col("v").alias("hv"),
-                    _norm(F.col("v")).alias("_nh"),
-                ),
-                "hist_id",
-            )
-            .where(
-                F.round(
-                    cosine_with_norms(
-                        F.col("nv"), F.col("hv"), F.col("_nn"), F.col("_nh")
-                    ),
-                    6,
-                )
-                >= threshold
-            )
+            pair_cosine(cand, survivors, seen, id_col, a="new_id", b="hist_id")
+            .where(F.col("cosine_sim") >= threshold)
             .select(F.col("new_id").alias(id_col))
             .distinct()
         )
@@ -1041,46 +987,9 @@ def incremental_embedding_dedup(
             dup_vs_history, id_col, "left_anti"
         ).localCheckpoint(eager=True)
     # Within-batch near-dups among the remaining vectors.
-    banded = _emb_banded(survivors, id_col)
-    pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            ["band", "bucket"],
-        )
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
     batch_dups = (
-        pairs.join(
-            survivors.select(
-                F.col(id_col).alias("id_a"),
-                F.col("v").alias("va"),
-                _norm(F.col("v")).alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            survivors.select(
-                F.col(id_col).alias("id_b"),
-                F.col("v").alias("vb"),
-                _norm(F.col("v")).alias("_nb"),
-            ),
-            "id_b",
-        )
-        .where(
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            )
-            >= threshold
-        )
+        pair_cosine(sign_lsh_pairs(survivors, id_col=id_col), survivors, id_col=id_col)
+        .where(F.col("cosine_sim") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

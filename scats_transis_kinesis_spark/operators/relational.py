@@ -535,3 +535,28 @@ def bucketed_prefix_sums(
             (F.row_number().over(w) + F.col("_bps_off_n")).cast("long"),
         )
     return out.drop("_bps_off_n", *[f"_bps_off_{i}" for i in range(len(srcs))])
+
+
+# A pair key packs two ids into one long (u in the high 32 bits), so a
+# pair shuffles and joins as ONE column instead of two.  It is exact only
+# for ids in [0, 2^31): anything else would alias another pair, so
+# pack_pair fails the job instead of returning wrong rows.
+PAIR_ID_LIMIT = 1 << 31
+
+
+def pack_pair(u: str, v: str) -> Column:
+    """``(u << 32) + v`` over the id columns ``u`` and ``v``.  A row with
+    either id outside [0, 2^31) raises an error naming both columns; a
+    null id packs to null."""
+    cu, cv = F.col(u).cast("long"), F.col(v).cast("long")
+    outside = (cu < 0) | (cu >= PAIR_ID_LIMIT) | (cv < 0) | (cv >= PAIR_ID_LIMIT)
+    return F.when(
+        outside,
+        F.raise_error(F.lit(f"pack_pair: {u} or {v} outside [0, 2^31)")),
+    ).otherwise(F.shiftleft(cu, 32) + cv)
+
+
+def unpack_pair(key: str) -> tuple[Column, Column]:
+    """The ``(u, v)`` columns of a :func:`pack_pair` key."""
+    k = F.col(key)
+    return F.shiftright(k, 32), k.bitwiseAND(F.lit((1 << 32) - 1))

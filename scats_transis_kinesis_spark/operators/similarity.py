@@ -11,6 +11,19 @@
   corpus itself (deterministic), refreshed offline in a real
   deployment.
 
+The embedding-pair kernel every pair-scoring path shares (batch and
+incremental sign-LSH dedup, the banding audits, IVF search and its
+recall audits):
+
+- ``sign_bucket`` / ``sign_lsh_buckets`` / ``sign_lsh_pairs`` — the one
+  sign-LSH banding (``LSH_BANDS`` × ``LSH_BITS`` over the leading dims)
+  and its slim ``(id_a, id_b)`` candidate equi-join on (band, bucket);
+- ``pair_cosine`` — the one pair scorer: vectors join back by key, norms
+  are per-row columns (``cosine_with_norms``), cosine rounds to 6;
+- ``ivf_candidates`` — the one IVF candidate frame: each query's
+  ``nprobe`` nearest centroids (with their rank) and the scored members
+  of those clusters.
+
 Dot products use ``F.zip_with`` + ``F.aggregate`` in double precision —
 JVM-side, no UDF.  Outputs round to 6 digits so partial-sum order can
 never flip a comparison against the oracle.
@@ -54,6 +67,104 @@ def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     same ``_norm`` expression values (storing a double in a column is
     exact) and the division tree is unchanged."""
     return _dot(a, b) / (na * nb)
+
+
+# Sign-LSH banding with basis hyperplanes (Charikar '02): band b packs
+# the sign bits of dims [b*bits, (b+1)*bits) into one int.  4 bands x 8
+# bits hash the first 32 dims — the precision layout; the recall twin
+# re-bands the same prefix as 8 x 4.
+LSH_BANDS = 4
+LSH_BITS = 8
+
+
+def sign_bucket(vec: Column, band: int, bits: int = LSH_BITS) -> Column:
+    """Pack the sign bits of dims [band*bits, (band+1)*bits) of ``vec``
+    into one int."""
+    bucket = F.lit(0)
+    for d in range(bits):
+        bit = F.when(F.element_at(vec, band * bits + d + 1) > 0, F.lit(1 << d)).otherwise(0)
+        bucket = bucket + bit
+    return bucket
+
+
+def sign_lsh_buckets(
+    vecs: DataFrame,
+    bands: int = LSH_BANDS,
+    bits: int = LSH_BITS,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """``(id, band, bucket)`` rows for an ``(id, v)`` vector frame."""
+    arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                sign_bucket(F.col("v"), b, bits).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return vecs.select(id_col, F.explode(arr).alias("bb")).select(
+        id_col, "bb.band", "bb.bucket"
+    )
+
+
+def sign_lsh_pairs(
+    vecs: DataFrame,
+    bands: int = LSH_BANDS,
+    bits: int = LSH_BITS,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Slim ``(id_a, id_b)`` candidate pairs, ``id_a < id_b``, sharing a
+    (band, bucket): a shuffle-partitioned equi-join, never all-pairs.
+    Vectors do not ride this shuffle; :func:`pair_cosine` joins them
+    back by key."""
+    buckets = sign_lsh_buckets(vecs, bands, bits, id_col)
+    a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
+    b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    return (
+        a.join(b, ["band", "bucket"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def pair_cosine(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame | None = None,
+    id_col: str = "vec_id",
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """``(a, b, cosine_sim)`` for the id pairs in ``pairs``: ``a`` keys
+    into ``left`` and ``b`` into ``right`` (default ``left``), both
+    ``(id, v)`` frames.  The vectors join back by key with each norm a
+    per-row column (:func:`cosine_with_norms`); the cosine rounds to 6
+    digits."""
+
+    def side(df: DataFrame, key: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(key), "v", _norm(F.col("v")).alias("_n")
+        )
+
+    # The a side's columns are renamed between the two joins.  Besides
+    # freeing the names for the b side, the renaming projection stops
+    # the optimizer from flattening the two joins into one reorderable
+    # group: given row counts but no column statistics (cached inputs),
+    # cost-based reordering would join the two vector sides first, on
+    # the cosine predicate alone — a nested loop over all vector pairs.
+    with_a = pairs.join(side(left, a), a).select(
+        a, b, F.col("v").alias("_va"), F.col("_n").alias("_na")
+    )
+    return with_a.join(side(left if right is None else right, b), b).select(
+        a,
+        b,
+        F.round(
+            cosine_with_norms(F.col("_va"), F.col("v"), F.col("_na"), F.col("_n")),
+            6,
+        ).alias("cosine_sim"),
+    )
 
 
 def cosine_topk_bruteforce(
@@ -294,13 +405,42 @@ def cosine_topk_bucketed(
     else:
         cents = centroids
         assigned = assign_to_centroids(embeddings, cents, id_col, vec_col)
-    q = embeddings.where(F.col(id_col).isin(query_ids)).select(
+    scored = ivf_candidates(
+        embeddings, assigned, cents, query_ids, nprobe, id_col, vec_col
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "cosine_sim")
+    )
+
+
+def ivf_candidates(
+    embeddings: DataFrame,
+    assigned: DataFrame,
+    centroids: DataFrame,
+    query_ids: list[int] | tuple[int, ...],
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The IVF candidate frame ``(query_id, crank, neighbor_id,
+    cosine_sim)``: each query's ``nprobe`` nearest ``(centroid_id,
+    cvec)`` centroids, ranked 1.. by rounded-6 cosine with the centroid
+    id as tiebreak, then every other member of those clusters in
+    ``assigned`` (from :func:`assign_to_centroids`) scored by rounded-6
+    cosine.  The centroids and the probe frame are broadcast; the corpus
+    is scanned once."""
+    from pyspark.sql import Window as W
+
+    q = embeddings.where(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         _norm(F.col(vec_col)).alias("_qn"),
     )
-    q_probe = (
-        q.crossJoin(F.broadcast(cents.withColumn("_ctn", _norm(F.col("cvec")))))
+    cranks = (
+        q.crossJoin(F.broadcast(centroids.withColumn("_ctn", _norm(F.col("cvec")))))
         .select(
             "query_id",
             "qvec",
@@ -314,32 +454,29 @@ def cosine_topk_bucketed(
             ).alias("c_sim"),
         )
         .withColumn(
-            "rn",
+            "crank",
             F.row_number().over(
                 W.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
             ),
         )
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qvec", "_qn", "centroid_id")
+        .where(F.col("crank") <= nprobe)
+        .select("query_id", "qvec", "_qn", "centroid_id", "crank")
     )
-    pairs = assigned.withColumn("_cn", _norm(F.col(vec_col))).join(
-        F.broadcast(q_probe), "centroid_id"
-    ).where(F.col(id_col) != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")
-            ),
-            6,
-        ).alias("cosine_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim")
+        assigned.withColumn("_cn", _norm(F.col(vec_col)))
+        .join(F.broadcast(cranks), "centroid_id")
+        .where(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            "crank",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(
+                cosine_with_norms(
+                    F.col("qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")
+                ),
+                6,
+            ).alias("cosine_sim"),
+        )
     )
 
 

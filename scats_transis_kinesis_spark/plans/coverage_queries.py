@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators.envelope import THROTTLE_ERROR, failed_subset
 from ..operators.multimodal import extract_features, sample_frames
+from ..operators.similarity import LSH_BANDS, LSH_BITS, pair_cosine, sign_lsh_pairs
 
 from ..sources.loaders import load_table
 from .registry import register
@@ -130,21 +131,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(media, every_ms=1000)
 
 
-LSH_BANDS = 4
-LSH_BITS = 8  # sign bits per band → 4×8 = first 32 of 64 dims
 LSH_DUP_THRESHOLD = 0.4  # same threshold as dedup_embedding_cosine
-
-
-def _sign_bucket(vec, band: int, bits: int = LSH_BITS):
-    """Pack the sign bits of dims [band*bits, (band+1)*bits) into one
-    int — a sign-random-projection bucket with basis hyperplanes.
-    ``bits`` defaults to the precision-oriented 4x8 banding; the round-8
-    recall twin (pipeline_queries26) passes 4 for its 8x4 layout."""
-    bucket = F.lit(0)
-    for d in range(bits):
-        bit = F.when(F.element_at(vec, band * bits + d + 1) > 0, F.lit(1 << d)).otherwise(0)
-        bucket = bucket + bit
-    return bucket
 
 
 @register(
@@ -192,56 +179,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _sign_bucket(F.col("v"), b).alias("bucket"))
-            for b in range(LSH_BANDS)
-        ]
-    )
-    buckets = e.select(
-        "vec_id", "v", F.explode(bands).alias("bb")
-    ).select("vec_id", "v", "bb.band", "bb.bucket")
-    a = buckets.select(F.col("vec_id").alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col("vec_id").alias("id_b"), "band", "bucket")
-    # candidates stay slim (two ids) through the distinct; vectors join
-    # back by key afterwards — the arrays never ride a shuffle they
-    # don't need (hash joins co-partitioned on vec_id at scale).
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # Norms hoisted to per-row columns before the verify joins
-    # (round-10, similarity.cosine_with_norms): the interpreted norm
-    # fold runs once per ROW instead of once per candidate pair per
-    # side; bit-identical.
-    from ..operators.similarity import _norm, cosine_with_norms
-
-    ea = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        _norm(F.col("v")).alias("_na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        _norm(F.col("v")).alias("_nb"),
-    )
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= LSH_DUP_THRESHOLD)
+    return pair_cosine(sign_lsh_pairs(e), e).where(
+        F.col("cosine_sim") >= LSH_DUP_THRESHOLD
     )
 
 

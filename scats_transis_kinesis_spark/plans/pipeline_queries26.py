@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
+from ..operators.similarity import LSH_BANDS, LSH_BITS, pair_cosine, sign_lsh_pairs
 from ..sources.loaders import load_table
-from .coverage_queries import LSH_BANDS, LSH_BITS, LSH_DUP_THRESHOLD, _sign_bucket
+from .coverage_queries import LSH_DUP_THRESHOLD
 from .pipeline_queries3 import _SPAN_FLAT_CTES, SPAN_N, _repeated_span_flat
 from .pipeline_queries13 import _idiv
 from .registry import register
@@ -80,68 +80,10 @@ def _lsh_verified_sql(cand: str) -> str:
     """
 
 
-def _banded_candidates(e: DataFrame, bands: int, bits: int) -> DataFrame:
-    """Slim (id_a, id_b) candidate pairs from a banded sign-LSH layout:
-    a shuffle-partitioned equi-join on (band, bucket) — never all-pairs.
-    Same plan shape as dedup_embedding_lsh's inline version (vectors do
-    not ride this shuffle; they join back by vec_id afterwards)."""
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                _sign_bucket(F.col("v"), b, bits).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = e.select("vec_id", F.explode(arr).alias("bb")).select(
-        "vec_id", "bb.band", "bb.bucket"
-    )
-    a = buckets.select(F.col("vec_id").alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col("vec_id").alias("id_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _verified_pairs(cand: DataFrame, e: DataFrame) -> DataFrame:
     """Exact-cosine verification of LSH candidates at the family's
-    round-6 / >= LSH_DUP_THRESHOLD contract (hash equi-joins on vec_id,
-    co-partitioned at scale)."""
-    # Norms hoisted to per-row columns before the verify joins
-    # (round-10, similarity.cosine_with_norms): the interpreted norm
-    # fold runs once per ROW instead of once per candidate pair per
-    # side; bit-identical.
-    from ..operators.similarity import _norm, cosine_with_norms
-
-    ea = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        _norm(F.col("v")).alias("_na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        _norm(F.col("v")).alias("_nb"),
-    )
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= LSH_DUP_THRESHOLD)
-    )
+    round-6 / >= LSH_DUP_THRESHOLD contract."""
+    return pair_cosine(cand, e).where(F.col("cosine_sim") >= LSH_DUP_THRESHOLD)
 
 
 @register(
@@ -173,7 +115,7 @@ def dedup_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    return _verified_pairs(_banded_candidates(e, R_BANDS, R_BITS), e)
+    return _verified_pairs(sign_lsh_pairs(e, R_BANDS, R_BITS), e)
 
 
 @register(
@@ -238,8 +180,8 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract as boilerplate_shingle_prune: one query's lifetime,
     # cleared by the harnesses between queries; at 100 TB these are
     # explicit checkpoints of slim id-pair tables.
-    p_cand = _banded_candidates(e, LSH_BANDS, LSH_BITS).persist()
-    r_cand = _banded_candidates(e, R_BANDS, R_BITS).persist()
+    p_cand = sign_lsh_pairs(e, LSH_BANDS, LSH_BITS).persist()
+    r_cand = sign_lsh_pairs(e, R_BANDS, R_BITS).persist()
     p_ver = _verified_pairs(p_cand, e).select("id_a", "id_b").persist()
     r_ver = _verified_pairs(r_cand, e).select("id_a", "id_b").persist()
     uni = (

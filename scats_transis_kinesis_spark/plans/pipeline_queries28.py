@@ -384,66 +384,18 @@ def _ivf_audit_frame(
     ``query_ids`` lets that comparison pick queries DISJOINT from the
     seed sample (a query that IS a centroid gets its own
     perfectly-centered cluster — a structural recall bias)."""
-    assigned = S.assign_to_centroids(emb, cents)
-    # Query/corpus norms hoisted into per-row columns before the joins
-    # (round-10 optimization, see similarity.cosine_with_norms):
-    # bit-identical values, but the interpreted norm fold runs once per
-    # row instead of once per scored pair.
-    q = emb.where(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        S._norm(F.col("embedding")).alias("_qn"),
-    )
     nq = len(query_ids)
-    cranks = (
-        q.crossJoin(F.broadcast(cents.withColumn("_ctn", S._norm(F.col("cvec")))))
-        .select(
-            "query_id",
-            "qvec",
-            "_qn",
-            "centroid_id",
-            F.round(
-                S.cosine_with_norms(
-                    F.col("qvec"), F.col("cvec"), F.col("_qn"), F.col("_ctn")
-                ),
-                6,
-            ).alias("c_sim"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("c_sim"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .where(F.col("crank") <= max(IVF_PROBES))
-        .select("query_id", "qvec", "_qn", "centroid_id", "crank")
-    )
     # One scored-candidate frame at max-probe, centroid rank attached;
     # checkpointed because BOTH the per-probe top-k and the per-probe
     # candidate count consume it (the banding-audit persist lesson —
     # without the pin the cosine join recomputes per aggregate).
-    cand = (
-        assigned.withColumn("_cn", S._norm(F.col("embedding")))
-        .join(F.broadcast(cranks), "centroid_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "crank",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                S.cosine_with_norms(
-                    F.col("qvec"),
-                    F.col("embedding"),
-                    F.col("_qn"),
-                    F.col("_cn"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    cand = S.ivf_candidates(
+        emb,
+        S.assign_to_centroids(emb, cents),
+        cents,
+        query_ids,
+        max(IVF_PROBES),
+    ).localCheckpoint(eager=True)
     # Declared-bounded crossJoin: the probe dimension is exactly
     # len(IVF_PROBES) literal rows.
     probes = spark.createDataFrame(

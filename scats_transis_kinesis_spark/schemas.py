@@ -114,41 +114,6 @@ SITE_LAYOUT = T.StructType(
     ]
 )
 
-# --- sink envelope ---------------------------------------------------------
-# {"PartitionKey": str, "Data": utf-8 JSON bytes}
-# (reference: kinesis_producer.py:44-56).
-KINESIS_RECORD = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("data", T.BinaryType(), False),
-    ]
-)
-
-# Kinesis put_records response entry, for subset-retry tests
-# (reference: kinesis_producer.py:87-98).
-KINESIS_RESULT_ENTRY = T.StructType(
-    [
-        T.StructField("error_code", T.StringType(), True),
-        T.StructField("error_message", T.StringType(), True),
-        T.StructField("sequence_number", T.StringType(), True),
-        T.StructField("shard_id", T.StringType(), True),
-    ]
-)
-
-# --- job-audit side channel ------------------------------------------------
-# Rows produced by the DI-framework stored procs (reference:
-# di_framework.py:35-104).
-JOB_AUDIT = T.StructType(
-    [
-        T.StructField("job_name", T.StringType(), False),
-        T.StructField("job_id", T.LongType(), True),
-        T.StructField("event", T.StringType(), False),  # start|status|end|error
-        T.StructField("status_desc", T.StringType(), True),
-        T.StructField("status_cd", T.StringType(), True),
-        T.StructField("event_ts", T.TimestampType(), False),
-    ]
-)
-
 # --- driver-provided synthetic tables (TESTDATA.md) ------------------------
 
 EVENTS = T.StructType(

@@ -188,7 +188,8 @@ class KinesisBatchWriter:
             batch_df, partition_key_col=self.partition_key_col, literal_key=self.literal_key
         )
         # Per-partition send: each executor streams its rows out in
-        # batch_size chunks; only counters return to the driver.
+        # batch_size chunks and returns nothing; a record still
+        # throttled after the retry fails the task instead.
         factory = self.client_factory
         stream_name = self.stream_name
         batch_size = self.batch_size

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 ORDERS = "o_orderkey long, o_custkey long, o_orderdate timestamp"
 LINES = "l_orderkey long, l_partkey long"
 
@@ -370,6 +372,29 @@ def test_association_triples_whale_basket_is_projected_losslessly(
     assert r["confidence_micros"] == (3 * 1_000_000) // 5
     # lift = 1e6·c_abc·n / (c_ab·c_c) = 1e6·3·6 // (5·3) = 1.2e6
     assert r["lift_micros"] == (3 * 1_000_000 * 6) // (5 * 3)
+
+
+def test_association_triples_rejects_partkey_past_2_pow_32(spark, tmp_path):
+    """Pairs of partkeys shuffle as one packed long; a partkey >= 2^32
+    would alias another pair, so the query must fail instead of
+    returning rows.  Part 2^32 + 3 is bought by three customers, so it
+    is frequent and reaches the pair-packing stage."""
+    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+        association_rules_triples,
+    )
+
+    big = (1 << 32) + 3
+    orders, lines, ok = [], [], 0
+    for cust, parts in [(c, [1, 2, big]) for c in (1, 2, 3)] + [
+        (c, [1, 2]) for c in (4, 5)
+    ]:
+        ok += 1
+        orders.append((ok, cust, _d(1997, 1, ok)))
+        lines.extend((ok, p) for p in parts)
+    _write(spark, tmp_path, "orders", orders, ORDERS)
+    _write(spark, tmp_path, "lineitem", lines, LINES)
+    with pytest.raises(Exception, match=r"outside \[0, 2\^31\)"):
+        association_rules_triples(spark, str(tmp_path)).collect()
 
 
 # ----------------------------------------------------------- TextRank

@@ -257,3 +257,29 @@ def test_link_prediction_survives_degree_one_vertex(spark, tmp_path):
         (101, 104, 1, aa, 0.5),
         (102, 104, 1, aa, 0.5),
     ]
+
+
+def test_link_prediction_rejects_partkey_past_2_pow_32(spark, tmp_path):
+    """Co-purchase pairs shuffle as one packed long; a partkey >= 2^32
+    would alias another pair, so the query must fail instead of
+    returning rows.  Part 2^32 + 5 shares a basket with part 103, the
+    wedge center of the degree-one fixture above."""
+    big = (1 << 32) + 5
+    baskets = {1: [101, 102, 103], 2: [101, 102], 3: [103, 104], 4: [103, big]}
+    orders = [
+        (ck * 10, ck, datetime.datetime(1995, 6, 1)) for ck in baskets
+    ]
+    lines = [(ck * 10, p) for ck, parts in baskets.items() for p in parts]
+    spark.createDataFrame(
+        orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"
+    ).write.parquet(f"{tmp_path}/orders.parquet")
+    spark.createDataFrame(
+        lines, "l_orderkey long, l_partkey long"
+    ).write.parquet(f"{tmp_path}/lineitem.parquet")
+
+    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+        link_prediction_scores,
+    )
+
+    with pytest.raises(Exception, match=r"outside \[0, 2\^31\)"):
+        link_prediction_scores(spark, str(tmp_path)).collect()

@@ -32,10 +32,10 @@ def _predicted_recall(c: float, bits: int, bands: int) -> float:
 
 
 def test_sign_lsh_candidate_recall_matches_theory(spark):
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.operators.similarity import (
         LSH_BANDS,
         LSH_BITS,
-        _sign_bucket,
+        sign_bucket as _sign_bucket,
     )
 
     dim = 64  # the embeddings-table layout (first 32 dims carry bits)

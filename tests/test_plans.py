@@ -422,6 +422,36 @@ def test_no_unbounded_nested_loop_join_anywhere(spark):
     assert not bnl, f"undeclared nested-loop join in: {bnl}"
 
 
+def test_pair_cosine_never_joins_the_vector_sides_first(spark):
+    """Cached inputs carry row counts but no column statistics, which
+    lets cost-based join reordering run.  pair_cosine's verify joins
+    must still probe the pairs by key: joining its two vector sides
+    first, on the cosine predicate alone, is a nested loop over all
+    vector pairs."""
+    from scats_transis_kinesis_spark.operators.similarity import (
+        pair_cosine,
+        sign_lsh_pairs,
+    )
+    from scats_transis_kinesis_spark.sources.loaders import load_table
+
+    e = load_table(spark, "embeddings", SF_DIR).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).persist()
+    pairs = sign_lsh_pairs(e).persist()
+    try:
+        e.count()
+        pairs.count()
+        df = pair_cosine(pairs, e).where(F.col("cosine_sim") >= 0.4)
+        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+    finally:
+        pairs.unpersist()
+        e.unpersist()
+
+
 def test_cbo_consumes_analyzed_table_statistics(spark, tmp_path):
     """Statistics-driven planning (SCALE.md §6.9): with CBO on, ANALYZE
     TABLE feeds exact row counts and column NDVs into Catalyst's

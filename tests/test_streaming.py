@@ -1216,6 +1216,34 @@ def test_incremental_embedding_dedup_across_runs(spark):
             incremental_embedding_dedup(run3, state)
 
 
+def test_incremental_embedding_dedup_matches_batch_lsh(spark, tmp_path):
+    """The batch/incremental banding contract: on an empty state dir,
+    incremental_embedding_dedup keeps exactly the ids that are not the
+    larger id of any dedup_embedding_lsh pair — both run the one sign-LSH
+    banding and pair scorer at the same threshold."""
+    from scats_transis_kinesis_spark.operators.dedup import (
+        incremental_embedding_dedup,
+    )
+    from scats_transis_kinesis_spark.plans.coverage_queries import (
+        LSH_DUP_THRESHOLD,
+        dedup_embedding_lsh,
+    )
+    from scats_transis_kinesis_spark.sources.loaders import load_table
+    from tests.test_plans import SF_DIR as sf
+
+    emb = load_table(spark, "embeddings", sf)
+    ids = {r["vec_id"] for r in emb.select("vec_id").collect()}
+    dropped = {r["id_b"] for r in dedup_embedding_lsh(spark, sf).collect()}
+    kept = {
+        r["vec_id"]
+        for r in incremental_embedding_dedup(
+            emb, str(tmp_path / "vecs"), threshold=LSH_DUP_THRESHOLD
+        ).collect()
+    }
+    assert dropped  # the contract is vacuous without near-dups
+    assert kept == ids - dropped
+
+
 # ----------------------------------------------------- PSI drift monitor
 
 
