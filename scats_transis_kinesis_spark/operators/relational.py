@@ -560,3 +560,16 @@ def unpack_pair(key: str) -> tuple[Column, Column]:
     """The ``(u, v)`` columns of a :func:`pack_pair` key."""
     k = F.col(key)
     return F.shiftright(k, 32), k.bitwiseAND(F.lit((1 << 32) - 1))
+
+
+def _idiv(num: Column, den: Column) -> Column:
+    """Exact floor division on non-negative longs, safe past 2^53:
+    ``num - num % den`` is an exact multiple of ``den`` in int64, so
+    the double division that follows is exact whenever the QUOTIENT
+    fits in 53 bits (every use here bounds it by 1e6·|keys|)."""
+    return ((num - num % den) / den).cast("long")
+
+
+# Plain int (not F.lit): module import must not require an active
+# SparkContext; Column arithmetic lifts it.
+_M = 1_000_000

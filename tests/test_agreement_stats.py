@@ -31,7 +31,7 @@ _ORDERS_SCHEMA = "o_orderkey long, o_orderpriority string, o_totalprice double, 
 def test_anova_hand_computed_f(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         anova_f_priority_spend,
     )
 
@@ -52,7 +52,7 @@ def test_anova_hand_computed_f(spark, tmp_path):
 def test_spearman_perfect_antimonotone_and_pearson_divergence(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         spearman_daily_kpis,
     )
 
@@ -76,7 +76,7 @@ def test_spearman_perfect_antimonotone_and_pearson_divergence(spark, tmp_path):
 def test_spearman_midranks_under_ties(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         spearman_daily_kpis,
     )
 
@@ -99,7 +99,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_ari_perfect_agreement(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         lang_id_agreement_ari,
     )
 
@@ -119,7 +119,7 @@ def test_ari_perfect_agreement(spark, tmp_path):
 
 
 def test_ari_anti_diagonal_is_minus_half(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         lang_id_agreement_ari,
     )
 
@@ -141,7 +141,7 @@ def test_ari_anti_diagonal_is_minus_half(spark, tmp_path):
 
 
 def test_shuffle_quality_single_source_is_exactly_even(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         shard_shuffle_quality,
     )
 
@@ -157,7 +157,7 @@ def test_shuffle_quality_single_source_is_exactly_even(spark, tmp_path):
 
 
 def test_shuffle_quality_two_source_expectation(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         shard_shuffle_quality,
     )
 
@@ -171,7 +171,7 @@ def test_shuffle_quality_two_source_expectation(spark, tmp_path):
 
 
 def test_shuffle_quality_degenerate_guards(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         shard_shuffle_quality,
     )
 

@@ -42,7 +42,7 @@ def test_anova_f_matches_direct_replay(spark, tmp_path):
         rows, "o_orderpriority string, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         anova_f_priority_spend,
     )
 
@@ -85,7 +85,7 @@ def test_anisotropy_matches_centroid_cosine_replay(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         embedding_anisotropy_audit,
     )
 

@@ -18,7 +18,7 @@ def _key(doc_id: int, n_chars: int) -> float:
 
 
 def test_ares_sample_matches_python_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         ARES_K,
         weighted_sample_ares,
     )

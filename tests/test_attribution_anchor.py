@@ -39,7 +39,7 @@ def test_linear_attribution_split_edges_and_direct(spark, tmp_path):
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         multitouch_attribution,
     )
 

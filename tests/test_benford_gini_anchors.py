@@ -25,7 +25,7 @@ def test_benford_digits_and_chi2_match_replay(spark, tmp_path):
         rows, "o_orderkey long, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         benford_digit_audit,
     )
 
@@ -56,7 +56,7 @@ def test_benford_digits_and_chi2_match_replay(spark, tmp_path):
 
 
 def test_gini_matches_closed_forms(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         revenue_concentration_gini,
     )
 

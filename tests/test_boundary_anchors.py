@@ -38,7 +38,7 @@ def test_range_join_bounds_inclusive_both_ends(spark, tmp_path):
         lines, "l_orderkey long, l_quantity double, l_shipdate timestamp"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         range_join_ship_lag,
     )
 
@@ -64,7 +64,7 @@ def test_cohort_weeks_truncate_to_monday(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         cohort_weekly_retention,
     )
 
@@ -91,7 +91,7 @@ def test_sliding_windows_are_half_open(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         sliding_window_traffic,
     )
 
@@ -106,7 +106,7 @@ def test_sliding_windows_are_half_open(spark, tmp_path):
 
 
 def test_chunking_stride_and_tail_dedup(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.extension_queries2 import (
+    from scats_transis_kinesis_spark.plans.text import (
         CHUNK_STRIDE,
         CHUNK_TOKENS,
         text_chunking,

@@ -73,7 +73,7 @@ def test_pav_matches_classic_pooling_replay(spark, tmp_path):
         rows, "o_totalprice double, o_orderstatus string"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         pav_calibration_bins,
     )
 
@@ -107,7 +107,7 @@ def test_conformal_coverage_matches_replay(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         conformal_coverage_audit,
     )
 
@@ -169,7 +169,7 @@ def test_decision_stump_matches_gini_replay(spark, tmp_path):
         rows, "doc_id long, n_chars long, lang string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         decision_stump_split,
     )
 

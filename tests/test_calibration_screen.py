@@ -25,7 +25,7 @@ def _write(spark, path, name, rows, schema):
 def test_pav_pools_adjacent_violators(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         pav_calibration_bins,
     )
 
@@ -52,7 +52,7 @@ def test_pav_pools_adjacent_violators(spark, tmp_path):
 
 
 def test_conformal_quantile_and_coverage(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         conformal_coverage_audit,
     )
 
@@ -80,7 +80,7 @@ def test_conformal_quantile_and_coverage(spark, tmp_path):
 
 
 def test_stump_perfectly_separable_feature(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         decision_stump_split,
     )
 

@@ -47,7 +47,7 @@ def _d(y, m, d):
 
 
 def test_kaplan_meier_hand_computed_steps(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         kaplan_meier_retention,
     )
 
@@ -78,7 +78,7 @@ def test_kaplan_meier_hand_computed_steps(spark, tmp_path):
 
 
 def test_hits_two_by_two_bipartite_hand_walk(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         hits_hubs_authorities,
     )
 
@@ -106,7 +106,7 @@ def test_hits_two_by_two_bipartite_hand_walk(spark, tmp_path):
 
 
 def test_concurrency_peaks_hand_profile(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         order_concurrency_peaks,
     )
 
@@ -141,7 +141,7 @@ def test_concurrency_peaks_hand_profile(spark, tmp_path):
 
 
 def test_markov_stationary_matches_pure_python_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         MARKOV_ROUNDS,
         markov_stationary_events,
     )
@@ -189,7 +189,7 @@ def test_markov_stationary_matches_pure_python_replay(spark, tmp_path):
 
 
 def test_sssp_weighted_path_graph(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         sssp_weighted_copurchase,
     )
 
@@ -210,7 +210,7 @@ def test_sssp_weighted_path_graph(spark, tmp_path):
 
 
 def test_grid_density_blobs_merge_and_noise(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         GRID_OFF,
         GRID_STRIDE,
         grid_density_clusters,
@@ -260,7 +260,7 @@ def test_grid_density_blobs_merge_and_noise(spark, tmp_path):
 def test_mutual_information_dependent_and_independent(spark, tmp_path):
     import math
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         mutual_information_lang_source,
     )
 
@@ -309,7 +309,7 @@ def test_mutual_information_dependent_and_independent(spark, tmp_path):
 
 
 def test_association_triples_hand_metrics(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         association_rules_triples,
     )
 
@@ -346,7 +346,7 @@ def test_association_triples_whale_basket_is_projected_losslessly(
     over ALL baskets, not the projected ones).  The oracle mirror can't
     catch a wrong projection applied to both engines; this hand anchor
     can."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         association_rules_triples,
     )
 
@@ -379,7 +379,7 @@ def test_association_triples_rejects_partkey_past_2_pow_32(spark, tmp_path):
     would alias another pair, so the query must fail instead of
     returning rows.  Part 2^32 + 3 is bought by three customers, so it
     is frequent and reaches the pair-packing stage."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         association_rules_triples,
     )
 
@@ -401,7 +401,7 @@ def test_association_triples_rejects_partkey_past_2_pow_32(spark, tmp_path):
 
 
 def test_textrank_replays_rounded_recurrence(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.text import (
         TR_DAMPING,
         TR_HH,
         TR_ITERS,
@@ -459,7 +459,7 @@ def test_textrank_replays_rounded_recurrence(spark, tmp_path):
 def test_burst_margin_flags_the_spike(spark, tmp_path):
     import math
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         BURST_GAMMA,
         BURST_RATE_FACTOR,
         burst_detection_daily,
@@ -516,7 +516,7 @@ def test_burst_margin_flags_the_spike(spark, tmp_path):
 def test_winnowing_shared_run_guarantee_and_disjoint_silence(
     spark, tmp_path
 ):
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         WIN_K,
         WIN_W,
         winnowing_dup_pairs,

@@ -23,7 +23,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_naive_bayes_diagonal_on_separable_corpus(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.text import (
         naive_bayes_lang_eval,
     )
 
@@ -50,7 +50,7 @@ def test_naive_bayes_diagonal_on_separable_corpus(spark, tmp_path):
 
 
 def test_jl_single_coordinate_displacement_is_exact(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         jl_projection_distortion_audit,
     )
 
@@ -72,7 +72,7 @@ def test_jl_single_coordinate_displacement_is_exact(spark, tmp_path):
 
 
 def test_rle_hand_counted_runs(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         rle_compression_audit,
     )
 

@@ -40,7 +40,7 @@ def test_repetition_signals_match_counter_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.text import (
         quality_repetition_signals,
     )
 
@@ -71,7 +71,7 @@ def test_repetition_signals_match_counter_replay(spark, tmp_path):
 
 
 def test_pii_redaction_matches_re_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.text import (
         REDACT_PATTERN,
         REDACT_TOKEN,
         pii_redact_blocklist,
@@ -102,7 +102,7 @@ def test_shard_assignment_matches_hashlib_replay(spark, tmp_path):
     texts = [f"doc body {i}" for i in range(100)]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         corpus_shard_assignment,
     )
 

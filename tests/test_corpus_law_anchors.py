@@ -57,7 +57,7 @@ def test_zipf_fit_matches_numpy_ols(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import zipf_law_fit
+    from scats_transis_kinesis_spark.plans.text import zipf_law_fit
 
     row = zipf_law_fit(spark, str(tmp_path)).collect()[0]
 
@@ -87,7 +87,7 @@ def test_heaps_fit_matches_numpy_ols(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import heaps_law_fit
+    from scats_transis_kinesis_spark.plans.text import heaps_law_fit
 
     row = heaps_law_fit(spark, str(tmp_path)).collect()[0]
 
@@ -134,10 +134,10 @@ def test_chi2_matches_dense_textbook_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         chi2_lang_source_independence,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         mutual_information_lang_source,
     )
 
@@ -204,7 +204,7 @@ def test_modularity_matches_newman_girvan_replay(spark, tmp_path):
         parts, "p_partkey long, p_brand string"
     ).write.parquet(f"{tmp_path}/part.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         modularity_brand_copurchase,
     )
 

@@ -68,7 +68,7 @@ def test_doc_stitch_matches_boundary_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         _STITCH_K,
         doc_stitch_overlap,
     )
@@ -113,7 +113,7 @@ def test_curation_log_matches_rule_precedence_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         curation_decision_log,
     )
 
@@ -168,7 +168,7 @@ def test_dictionary_entropy_matches_shannon_replay(spark, tmp_path):
         " l_returnflag string, l_linestatus string",
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries25 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _DICT_COLS,
         dictionary_encoding_audit,
     )
@@ -218,7 +218,7 @@ def test_compaction_plan_matches_cumulative_offset_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _COMPACT_GROUPS,
         _COMPACT_SHARDS,
         compaction_coalesce_plan,

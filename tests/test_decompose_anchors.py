@@ -81,10 +81,10 @@ def test_decompose_and_strength_match_replay(spark, tmp_path):
     view = [2, 4, 3, 5]
     _write_events(spark, tmp_path, {"click": click, "view": view})
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         trend_seasonal_decompose,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         seasonal_strength_audit,
     )
 
@@ -158,7 +158,7 @@ def test_degree_assortativity_matches_pearson_replay(spark, tmp_path):
     }
     _write_baskets(spark, tmp_path, baskets)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         degree_assortativity_copurchase,
     )
 
@@ -205,7 +205,7 @@ def test_local_clustering_matches_triangle_replay(spark, tmp_path):
         baskets[ok] = [8, leaf]
     _write_baskets(spark, tmp_path, baskets)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         local_clustering_topk,
     )
 

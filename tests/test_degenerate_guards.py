@@ -28,7 +28,7 @@ def test_bandit_policy_matching_zero_events_reports_null(spark, tmp_sf):
         rows, "user_id long, event_type string, value double"
     ).write.parquet(f"{tmp_sf}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         bandit_replay_evaluation,
     )
 
@@ -56,7 +56,7 @@ def test_mase_constant_series_reports_null_not_divzero(spark, tmp_sf):
         f"{tmp_sf}/orders.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         forecast_backtest_mase,
     )
 
@@ -77,7 +77,7 @@ def test_ari_single_cluster_partition_reports_null(spark, tmp_sf):
         "'en' as lang", "text"
     ).write.parquet(f"{tmp_sf}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         lang_id_agreement_ari,
     )
 
@@ -106,7 +106,7 @@ def test_pearson_constant_series_reports_null_not_divzero(spark, tmp_sf):
         days, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_sf}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         spearman_daily_kpis,
     )
 

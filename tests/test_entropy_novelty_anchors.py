@@ -33,7 +33,7 @@ def test_token_entropy_matches_micro_sum_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
+    from scats_transis_kinesis_spark.plans.text import (
         token_entropy_quality,
     )
 
@@ -70,7 +70,7 @@ def test_ngram_novelty_matches_first_seen_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.text import (
         ngram_novelty_decay,
     )
 
@@ -125,10 +125,10 @@ def test_short_doc_does_not_crash_shingle_consumers(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         repeated_span_coverage,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.text import (
         ngram_novelty_decay,
     )
 

@@ -29,7 +29,7 @@ def test_erasure_cascade_counts_and_checksums(spark, tmp_path):
         "l_orderkey long, l_linenumber long",
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries11 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         erasure_cascade_audit,
     )
 

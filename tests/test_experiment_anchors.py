@@ -46,7 +46,7 @@ def test_welch_t_matches_textbook_replay(spark, tmp_path):
         rows, "o_orderpriority string, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         welch_t_test_orders,
     )
 
@@ -81,7 +81,7 @@ def test_theil_sen_shrugs_off_planted_outlier(spark, tmp_path):
         rows, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         theil_sen_trend_daily,
     )
 
@@ -135,7 +135,7 @@ def test_fdr_bh_stepup_matches_textbook_replay(spark, tmp_path):
         orders, "o_orderkey long, o_custkey long, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         fdr_bh_screen,
     )
 
@@ -197,7 +197,7 @@ def test_cuped_matches_replay_with_md5_arm_split(spark, tmp_path):
         rows, "user_id long, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         cuped_adjusted_ab,
     )
 

@@ -27,7 +27,7 @@ def _write(spark, path, name, rows, schema):
 def test_fdr_bh_matches_python_mirror(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         fdr_bh_screen,
     )
 
@@ -86,7 +86,7 @@ def test_fdr_bh_matches_python_mirror(spark, tmp_path):
 def test_poisson_bootstrap_constant_table_has_zero_se(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         poisson_bootstrap_se,
     )
 
@@ -104,7 +104,7 @@ def test_poisson_bootstrap_constant_table_has_zero_se(spark, tmp_path):
 
 
 def test_cuped_perfect_covariate_wipes_the_diff(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         cuped_adjusted_ab,
     )
 

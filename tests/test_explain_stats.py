@@ -24,7 +24,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_decision_log_reason_precedence(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         curation_decision_log,
     )
 
@@ -49,10 +49,10 @@ def test_decision_log_reason_precedence(spark, tmp_path):
 
 
 def test_decision_log_kept_rows_equal_clean_pipeline(spark):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.text import (
         corpus_clean_pipeline,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         curation_decision_log,
     )
 
@@ -67,7 +67,7 @@ def test_decision_log_kept_rows_equal_clean_pipeline(spark):
 
 
 def test_equidepth_exact_decile_boundaries(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         equidepth_histogram_stats,
     )
 
@@ -86,7 +86,7 @@ def test_equidepth_exact_decile_boundaries(spark, tmp_path):
 def test_blocking_cost_hand_counts(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         blocking_cost_audit,
     )
 

@@ -45,7 +45,7 @@ def test_event_regex_funnel_matches_re_replay(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         _FUNNEL_PATTERNS,
         event_regex_funnel,
     )
@@ -69,7 +69,7 @@ def test_event_regex_funnel_matches_re_replay(spark, tmp_path):
 
 
 def test_rle_runs_match_sorted_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _RLE_COLS,
         rle_compression_audit,
     )

@@ -71,7 +71,7 @@ def test_deletion_blocking_is_lossless_for_lev1(spark, tmp_path):
                 expect.add((a[0], b[0]))
     assert expect, "fixture must plant matching pairs"
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         customer_match_pairs,
     )
 
@@ -111,7 +111,7 @@ def test_fuzzy_match_blocked_ids_past_2_pow_32(spark, tmp_path):
     }
     assert len(expect) >= 4 and any(a >= big and b >= big for a, b, _ in expect)
 
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         fuzzy_match_blocked,
     )
 

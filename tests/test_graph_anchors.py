@@ -162,7 +162,7 @@ def test_hits_matches_integer_micros_replay(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         hits_hubs_authorities,
     )
 
@@ -198,7 +198,7 @@ def test_burst_viterbi_matches_minplus_replay(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         burst_detection_daily,
     )
 
@@ -239,7 +239,7 @@ def test_link_prediction_survives_degree_one_vertex(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         link_prediction_scores,
     )
 
@@ -277,7 +277,7 @@ def test_link_prediction_rejects_partkey_past_2_pow_32(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         link_prediction_scores,
     )
 

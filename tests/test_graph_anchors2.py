@@ -94,7 +94,7 @@ def test_sssp_matches_bellman_ford_replay(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         SSSP_ROUNDS,
         sssp_weighted_copurchase,
     )
@@ -153,7 +153,7 @@ def test_pca_power_iteration_matches_integer_replay(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         _PCA_ROUNDS,
         pca_top_component,
     )

@@ -21,7 +21,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_dictionary_audit_hand_entropy(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries25 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         dictionary_encoding_audit,
     )
 
@@ -53,7 +53,7 @@ def test_dictionary_audit_hand_entropy(spark, tmp_path):
 
 
 def test_kruskal_hierarchical_ranks_match_python(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         kruskal_wallis_priority_spend,
     )
 
@@ -103,7 +103,7 @@ def test_kruskal_hierarchical_ranks_match_python(spark, tmp_path):
 
 
 def test_conformal_kth_across_many_buckets(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         conformal_coverage_audit,
     )
 
@@ -128,7 +128,7 @@ def test_conformal_kth_across_many_buckets(spark, tmp_path):
 
 
 def test_equidepth_matches_sorted_order_statistics(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         equidepth_histogram_stats,
     )
 

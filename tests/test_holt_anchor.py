@@ -37,7 +37,7 @@ def test_holt_matches_hand_replayed_integer_recurrence(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         holt_linear_daily,
     )
 

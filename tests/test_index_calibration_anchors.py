@@ -43,8 +43,10 @@ def _quality(text: str) -> float:
 
 
 def test_inverted_index_matches_postings_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         HH_THRESHOLD,
+    )
+    from scats_transis_kinesis_spark.plans.retrieval import (
         inverted_index_postings,
     )
 
@@ -108,7 +110,7 @@ def test_quality_calibration_keeps_exact_boundary(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         quality_calibrate_by_source,
     )
 

@@ -44,7 +44,7 @@ def _write_documents(spark, path, cells):
 def test_chi2_zero_on_exactly_independent_table(spark, tmp_path):
     # Cells chosen so every observed count equals its expectation
     # (o = row_total * col_total / n): 4/2 vs 8/4 with margins 6·12, 12·6.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         chi2_lang_source_independence,
     )
 
@@ -61,7 +61,7 @@ def test_chi2_zero_on_exactly_independent_table(spark, tmp_path):
 
 def test_chi2_saturates_on_perfect_association(spark, tmp_path):
     # Diagonal-only table: chi2 = n·min(r-1, c-1) exactly, Cramér's V = 1.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         chi2_lang_source_independence,
     )
 
@@ -76,7 +76,7 @@ def test_chi2_saturates_on_perfect_association(spark, tmp_path):
 
 
 def test_gains_curve_monotone_and_consistent(spark):
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         quality_gains_by_band,
     )
 
@@ -104,7 +104,7 @@ def test_gains_curve_monotone_and_consistent(spark):
 
 
 def test_jackknife_se_zero_on_constant_column(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         jackknife_ci_order_total,
     )
 
@@ -124,7 +124,7 @@ def test_jackknife_variance_tracks_srs_closed_form(spark):
     # For the sample mean, the delete-one-block jackknife estimates the
     # same quantity as the closed-form s²/n; with 32 hash blocks over
     # 1.5k orders the two must agree well within a factor of two.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         jackknife_ci_order_total,
     )
     from scats_transis_kinesis_spark.sources.loaders import load_table

@@ -47,7 +47,7 @@ def _order(key, price, date, prio):
 
 
 def test_welch_t_hand_computed(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         welch_t_test_orders,
     )
 
@@ -74,7 +74,7 @@ def test_welch_t_hand_computed(spark, tmp_path):
 
 
 def test_theil_sen_ignores_the_outlier_day(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         theil_sen_trend_daily,
     )
 
@@ -94,7 +94,7 @@ def test_theil_sen_ignores_the_outlier_day(spark, tmp_path):
 
 
 def test_mase_periodic_series_snaive_wins(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         forecast_backtest_mase,
     )
 
@@ -124,7 +124,7 @@ def test_mase_periodic_series_snaive_wins(spark, tmp_path):
 
 
 def test_assortativity_star_is_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         degree_assortativity_copurchase,
     )
 
@@ -139,7 +139,7 @@ def test_assortativity_star_is_minus_one(spark, tmp_path):
 
 
 def test_local_clustering_k6_is_exactly_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         local_clustering_topk,
     )
 
@@ -158,7 +158,7 @@ def test_local_clustering_k6_is_exactly_one(spark, tmp_path):
 
 
 def test_regex_funnel_hand_sessions(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         event_regex_funnel,
     )
 

@@ -30,7 +30,7 @@ def test_islands_boundaries_threshold_and_key_isolation(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         sensor_outage_islands,
     )
 

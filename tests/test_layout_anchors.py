@@ -36,7 +36,7 @@ def test_shard_shuffle_quality_matches_hashlib_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         _SHUFFLE_SHARDS,
         shard_shuffle_quality,
     )
@@ -83,7 +83,7 @@ def test_feature_hashing_occupancy_matches_hashlib_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _HASH_DIMS,
         feature_hashing_collision_audit,
     )
@@ -120,7 +120,7 @@ def test_selectivity_estimates_match_interpolation_replay(spark, tmp_path):
         rows, "l_orderkey long, l_extendedprice double"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _SEL_BANDS,
         _SEL_PREDICATES,
         selectivity_estimate_audit,

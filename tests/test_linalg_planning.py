@@ -25,7 +25,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_pca_axis_aligned_cloud(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         pca_top_component,
     )
 
@@ -47,7 +47,7 @@ def test_pca_axis_aligned_cloud(spark, tmp_path):
 
 
 def test_doc_stitch_finds_split_pair_and_skips_short_docs(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         doc_stitch_overlap,
     )
 
@@ -70,7 +70,7 @@ def test_doc_stitch_finds_split_pair_and_skips_short_docs(spark, tmp_path):
 def test_bloom_textbook_sizing(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         bloom_filter_sizing,
     )
 
@@ -98,7 +98,7 @@ def test_bloom_textbook_sizing(spark, tmp_path):
 
 
 def test_lsh_s_curve_matches_python_ieee_chain(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         _LSH_COMBOS,
         _LSH_SIMS,
         lsh_parameter_planner,

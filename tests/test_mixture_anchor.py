@@ -10,7 +10,7 @@ from __future__ import annotations
 
 
 def test_mixture_plan_and_materialize_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         MIX_TOKEN_BUDGET,
         MIX_WEIGHT_DENOM,
         mixture_epoch_plan,

@@ -35,7 +35,7 @@ def test_ntile_from_rank_matches_sql_ntile_all_shapes(spark):
 
 
 def test_time_decay_scores_by_hand(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         DECAY_LAMBDA,
         DECAY_REF_DATE,
         time_decay_user_scores,

@@ -21,7 +21,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_modularity_two_cliques_one_bridge(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         modularity_brand_copurchase,
     )
 
@@ -44,7 +44,7 @@ def test_modularity_two_cliques_one_bridge(spark, tmp_path):
 
 
 def test_selectivity_matches_python_mirror(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _SEL_BANDS,
         _SEL_PREDICATES,
         selectivity_estimate_audit,
@@ -81,7 +81,7 @@ def test_selectivity_matches_python_mirror(spark, tmp_path):
 
 
 def test_nearest_centroid_separable_clusters(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         nearest_centroid_accuracy,
     )
 

@@ -24,7 +24,7 @@ def test_phrase_search_requires_adjacency(spark, tmp_path):
         f"{tmp_path}/documents.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         phrase_search_positional,
     )
 
@@ -46,7 +46,7 @@ def test_bpe_first_merges_by_hand(spark, tmp_path):
         [(1, docs[0].strip())], "doc_id long, text string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.text import (
         bpe_merge_induction,
     )
 

@@ -25,7 +25,7 @@ def _write(spark, path, name, rows, schema):
 def test_bandit_replay_matching(spark, tmp_path):
     import datetime
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         bandit_replay_evaluation,
     )
 
@@ -55,7 +55,7 @@ def test_bandit_replay_matching(spark, tmp_path):
 
 
 def test_feature_hashing_matches_python_md5(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         _HASH_DIMS,
         feature_hashing_collision_audit,
     )
@@ -85,7 +85,7 @@ def test_feature_hashing_matches_python_md5(spark, tmp_path):
 
 
 def test_neyman_allocation_integer_arithmetic(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         neyman_allocation_plan,
     )
 

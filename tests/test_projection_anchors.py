@@ -28,7 +28,7 @@ def _round_half(x: float) -> int:
 
 
 def test_jl_distortion_matches_integer_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         _JL_IN_DIM,
         _JL_OUT_DIM,
         _JL_SIGNS,
@@ -78,7 +78,7 @@ def test_jl_distortion_matches_integer_replay(spark, tmp_path):
 
 
 def test_poisson_bootstrap_matches_hashlib_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         _PB_CDF,
         _PB_REPLICATES,
         poisson_bootstrap_se,

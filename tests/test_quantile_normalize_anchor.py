@@ -21,7 +21,7 @@ def test_quantile_normalization_matches_bolstad_hand_case(spark, tmp_path):
         rows, "doc_id long, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries11 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         quantile_normalize_by_source,
     )
 

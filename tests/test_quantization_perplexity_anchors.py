@@ -36,7 +36,7 @@ def test_int8_quantization_matches_replay(spark, tmp_path):
         "vec_id long, embedding array<double>, label int",
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         embedding_int8_quantization,
     )
 
@@ -68,7 +68,7 @@ def test_unigram_perplexity_matches_lm_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.text import (
         unigram_perplexity_score,
     )
 

@@ -38,7 +38,7 @@ def test_kruskal_wallis_matches_midrank_replay(spark, tmp_path):
         rows, "o_orderpriority string, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         _KW_CRIT,
         kruskal_wallis_priority_spend,
     )
@@ -99,7 +99,7 @@ def test_markov_stationary_matches_floored_power_iteration(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         MARKOV_ROUNDS,
         markov_stationary_events,
     )

@@ -26,7 +26,7 @@ def _write(spark, path, name, rows, schema):
 def test_kruskal_wallis_textbook_case(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         kruskal_wallis_priority_spend,
     )
 
@@ -54,7 +54,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_compaction_single_doc_plan(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         compaction_coalesce_plan,
     )
 
@@ -66,7 +66,7 @@ def test_compaction_single_doc_plan(spark, tmp_path):
 
 
 def test_compaction_conservation_and_contiguity(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         compaction_coalesce_plan,
     )
 
@@ -89,7 +89,7 @@ def test_compaction_conservation_and_contiguity(spark, tmp_path):
 
 
 def test_seasonal_strength_pure_cycle_scores_high(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         seasonal_strength_audit,
     )
 

@@ -184,13 +184,13 @@ def _replay_audit(f64, cents, qids, probes, k):
 
 
 def test_ivf_kmeans_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVFK_QUERY_IDS,
         ivf_kmeans_recall_audit,
     )
@@ -236,15 +236,15 @@ def test_ivf_kmeans_recall_audit_replay(spark, tmp_path):
 
 
 def test_sim_topk_ivf_kmeans_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.extension_queries import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         _SIM_QUERY_IDS,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         sim_topk_ivf_kmeans,
     )
 
@@ -276,11 +276,11 @@ def test_sim_topk_ivf_kmeans_replay(spark, tmp_path):
 def test_ivf_quantizer_balance_audit_replay(spark, tmp_path):
     from collections import Counter
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_quantizer_balance_audit,
     )
 
@@ -340,10 +340,10 @@ _SPAN_DOCS = [
 
 
 def test_stream_matches_batch_twin_and_decision_points(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_span_coverage,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_span_coverage_stream,
     )
 
@@ -380,7 +380,7 @@ def test_stream_result_is_batch_count_invariant(spark, tmp_path):
     therefore the coverage report — cannot depend on how the delta was
     split.  (n=1 is the single-batch degenerate case; n=4 splits the 4
     delta docs as finely as the file source can.)"""
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         _span_coverage_stream,
     )
 

@@ -56,7 +56,7 @@ def _write_events(spark, path, rows):
 
 
 def test_regex_long_words_boundary_case_and_greed(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.text import (
         regex_extract_long_words,
     )
 
@@ -85,7 +85,7 @@ def test_regex_long_words_boundary_case_and_greed(spark, tmp_path):
 
 
 def test_resample_locf_null_lead_carry_and_override(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         resample_locf_fill,
     )
 
@@ -130,7 +130,7 @@ def test_try_cast_integer_literal_semantics_match_duckdb(spark, tmp_path):
     import duckdb
 
     from scats_transis_kinesis_spark.plans.registry import REGISTRY
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         try_cast_dirty_data,
     )
 
@@ -171,7 +171,7 @@ def test_try_cast_integer_literal_semantics_match_duckdb(spark, tmp_path):
 
 
 def test_ngram_contamination_boundary_and_distinct_counting(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.curation import (
         CONTAM_BENCH_DOCS,
         CONTAM_NGRAM,
         ngram_contamination_check,
@@ -221,7 +221,7 @@ def test_ngram_contamination_boundary_and_distinct_counting(spark, tmp_path):
 
 
 def test_dq_constraint_audit_dup_arithmetic_and_null_fk(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         dq_constraint_audit,
     )
 
@@ -267,7 +267,7 @@ def test_dq_constraint_audit_dup_arithmetic_and_null_fk(spark, tmp_path):
 
 
 def test_curriculum_mixture_cap_binding_and_hash_membership(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         MIXTURE_WEIGHTS,
         curriculum_mixture_sample,
     )

@@ -57,7 +57,7 @@ M = 1_000_000
 
 
 def test_kmeans_ctes_default_chain_is_byte_identical():
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         _kmeans_ctes,
     )
 
@@ -75,7 +75,7 @@ def test_kmeans_ctes_default_chain_is_byte_identical():
 
 
 def test_kmeans_ctes_prefixed_chain_renames_every_cte():
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         _kmeans_ctes,
     )
 
@@ -113,7 +113,7 @@ def _h64(text: str) -> int:
 
 
 def test_dedup_stream_decision_points(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_exact_dedup_stream,
     )
 
@@ -146,7 +146,7 @@ def test_dedup_stream_is_batch_count_invariant(spark, tmp_path):
     """Sweep the micro-batch count 1/2/4: per-hash (min id, count)
     partials over disjoint doc sets merge by (min, sum), so the state
     — and the report — cannot depend on how the delta was split."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         _dedup_state_stream,
     )
 
@@ -222,16 +222,16 @@ def _replay_pair_agreement(pa, pb):
 
 
 def test_ivf_seeding_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVFK_QUERY_IDS,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_seeding_recall_audit,
     )
 
@@ -276,11 +276,11 @@ def test_ivf_seeding_recall_audit_replay(spark, tmp_path):
 
 
 def test_ivf_quantizer_stability_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_quantizer_stability_audit,
     )
 
@@ -319,7 +319,7 @@ def test_stability_audit_identical_trainings_report_exact_identity(
     all-even ids — the half subset IS the corpus, both trainings
     coincide, and the audit must report rand = 1e6 / ari = 1.0 with
     matched == full_pairs == half_pairs."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_quantizer_stability_audit,
     )
 

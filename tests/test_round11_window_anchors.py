@@ -57,7 +57,7 @@ def _write_documents(spark, path, rows):
 
 
 def test_hard_negatives_exclude_same_label_and_tiebreak(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         HN_K,
         HN_QUERY_IDS,
         emb_hard_negatives,
@@ -112,7 +112,7 @@ def test_hard_negatives_exclude_same_label_and_tiebreak(spark, tmp_path):
 
 
 def test_label_margin_sign_detects_planted_mislabel(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         embedding_label_margin,
     )
 
@@ -172,7 +172,7 @@ def test_label_margin_sign_detects_planted_mislabel(spark, tmp_path):
 
 
 def test_length_bucketed_batches_boundaries_and_packing(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         LB_BATCH_SIZE,
         LB_BUCKET_WIDTH,
         length_bucketed_batches,

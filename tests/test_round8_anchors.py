@@ -90,7 +90,7 @@ def _write_embeddings(spark, tmp_path):
 
 def test_lsh_recall_banding_replay(spark, tmp_path):
     _write_embeddings(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         dedup_embedding_lsh_recall,
     )
 
@@ -111,7 +111,7 @@ def test_lsh_recall_banding_replay(spark, tmp_path):
 
 def test_lsh_banding_tradeoff_replay(spark, tmp_path):
     _write_embeddings(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         lsh_banding_tradeoff_audit,
     )
 
@@ -201,10 +201,10 @@ def test_repeated_span_islands_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         repeated_span_coverage,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         repeated_span_islands,
     )
 

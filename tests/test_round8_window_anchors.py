@@ -64,7 +64,7 @@ def test_asof_equal_ts_match_and_no_prior_click(spark, tmp_path):
         # u3: never clicked
         (8, T(12), 3, "purchase", 0.0, ""),      # -> NULL
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         asof_purchase_last_click,
     )
 
@@ -98,10 +98,12 @@ def test_null_key_join_family(spark, tmp_path):
         (12, 2, "F", 100.0, T(1), "1-URGENT"),
         (13, None, "F", 50.0, T(1), "1-URGENT"),    # orphan order
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        join_anti, join_outer_counts, join_semi,
+    from scats_transis_kinesis_spark.plans.relational import (
+        join_anti,
+        join_outer_counts,
+        join_semi,
     )
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q13_order_count_distribution,
     )
 
@@ -162,8 +164,9 @@ def test_rollup_cube_data_null_vs_subtotal_null(spark, tmp_path):
     _write_orders(spark, tmp_path, [
         (i, 1, s, 10.0, T(1), p) for i, (s, p) in enumerate(rows)
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        cube_status_priority, rollup_status_priority,
+    from scats_transis_kinesis_spark.plans.relational import (
+        cube_status_priority,
+        rollup_status_priority,
     )
 
     got_rollup = sorted(
@@ -204,7 +207,7 @@ def test_topk_per_group_tie_break(spark, tmp_path):
         (9, 2, "F", 50.0, T(1), "1-URGENT"),
         (8, 2, "F", 60.0, T(1), "1-URGENT"),    # under k rows: all kept
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         topk_orders_per_customer,
     )
 
@@ -232,7 +235,7 @@ def test_salted_join_matches_plain_join(spark, tmp_path):
         (2, "c2", 8, 0.0, "A"),
         (3, "c3", 8, 0.0, "A"),   # no events
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
+    from scats_transis_kinesis_spark.plans.relational import (
         salted_join_skew,
     )
 
@@ -259,7 +262,7 @@ def test_histogram_half_open_bucket_edges(spark, tmp_path):
     _write_orders(spark, tmp_path, [
         (i, 1, "F", p, T(1), "1-URGENT") for i, p in enumerate(prices)
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         histogram_order_totals,
     )
 
@@ -285,7 +288,7 @@ def test_window_frames_and_ntile_remainder(spark, tmp_path):
         (4, 7, "F", 48.0, T(3), "1-URGENT"),
         (5, 7, "F", 60.0, T(4), "1-URGENT"),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         window_frames_running,
     )
 
@@ -314,7 +317,7 @@ def test_pivot_zero_fill_and_unpinned_type(spark, tmp_path):
         (4, T(1), 2, "view", 0.0, ""),
         (5, T(1), 3, "login", 0.0, ""),   # not a pivoted type
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         pivot_event_counts,
     )
 
@@ -338,7 +341,7 @@ def test_correlated_subquery_single_order_never_qualifies(spark, tmp_path):
         (2, 2, "F", 100.0, T(1), "1-URGENT"),
         (3, 2, "F", 400.0, T(1), "1-URGENT"),     # 400 > 375: qualifies
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
+    from scats_transis_kinesis_spark.plans.relational import (
         correlated_subquery_orders,
     )
 

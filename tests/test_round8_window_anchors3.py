@@ -51,7 +51,7 @@ def test_q15_equality_to_max_keeps_all_tied_suppliers(spark, tmp_path):
         (3, 1, 2, 1, 1.0, 25.0, 0.0, "N", T(1)),
         (4, 1, 3, 1, 1.0, 49.0, 0.0, "N", T(1)),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q15_top_supplier_by_revenue,
     )
 
@@ -80,7 +80,7 @@ def test_q10_returnflag_filter_and_topk_tiebreak(spark, tmp_path):
         (2, 1, 1, 1, 1.0, 50.0, 0.0, "R", T(1)),
         (3, 1, 1, 1, 1.0, 999.0, 0.0, "N", T(1)),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q10_returned_revenue_top20,
     )
 
@@ -106,7 +106,7 @@ def test_q12_high_low_partition_is_exhaustive(spark, tmp_path):
         (4, 1, 1, 1, 1.0, 1.0, 0.0, "R", T(1)),
         (4, 1, 1, 2, 1.0, 1.0, 0.0, "R", T(1)),  # 2 lines of one order
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q12_priority_shipping,
     )
 
@@ -140,7 +140,7 @@ def test_q7_direction_sensitive_nation_pairs(spark, tmp_path):
         (3, 1, 1, 1, 1.0, 40.0, 0.0, "N", T(1)),   # same nation: out
         (4, 1, 1, 1, 1.0, 80.0, 0.0, "N", T(1)),   # cust nation 2: out
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q7_nation_trade_volume,
     )
 
@@ -162,7 +162,7 @@ def test_distinct_ignores_null_in_count(spark, tmp_path):
         (5, T(1), 3, None, 0.0, ""),        # NULL type: not counted
     ], "event_id long, ts timestamp, user_id long, event_type string, "
        "value double, props string")
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         distinct_exact,
     )
 
@@ -210,7 +210,7 @@ def _write_docs(spark, tmp_path):
 
 def test_text_lang_id_boundary_is_strict(spark, tmp_path):
     _write_docs(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.extension_queries import text_lang_id
+    from scats_transis_kinesis_spark.plans.text import text_lang_id
 
     got = {
         r["doc_id"]: (r["en_stop_ratio"], r["lang_guess"])
@@ -227,7 +227,7 @@ def test_text_lang_id_boundary_is_strict(spark, tmp_path):
 
 def test_text_quality_blend_replay(spark, tmp_path):
     _write_docs(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.extension_queries import text_quality
+    from scats_transis_kinesis_spark.plans.text import text_quality
 
     got = {
         r["doc_id"]: (r["n_tokens"], r["stop_ratio"], r["punct_ratio"], r["quality"])
@@ -243,7 +243,7 @@ def test_text_quality_blend_replay(spark, tmp_path):
 
 def test_text_bpe_regex_token_count_replay(spark, tmp_path):
     _write_docs(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.extension_queries2 import text_bpe_tokens
+    from scats_transis_kinesis_spark.plans.text import text_bpe_tokens
 
     got = {
         r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_tokens"], r["chars_per_token"])

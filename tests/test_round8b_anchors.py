@@ -62,7 +62,7 @@ def test_temperature_sampling_replay(spark, tmp_path):
             rows.append((i, text, lang, "web", len(text)))
             i += 1
     _write_documents(spark, tmp_path, rows)
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         temperature_sampling_plan,
     )
 
@@ -134,7 +134,7 @@ def test_greedy_source_coverage_replay(spark, tmp_path):
             rows.append((i, text, "en", src, len(text)))
             i += 1
     _write_documents(spark, tmp_path, rows)
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         greedy_source_coverage,
     )
 
@@ -170,7 +170,7 @@ def test_greedy_fewer_sources_than_rounds_emits_short_report(spark, tmp_path):
     """Round-8 ADVICE guard: with fewer eligible sources than
     GREEDY_ROUNDS the oracle's later picks are empty SELECTs, so the
     Spark loop must break (not IndexError) and emit the shorter report."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         greedy_source_coverage,
     )
 
@@ -196,7 +196,7 @@ def test_greedy_fewer_sources_than_rounds_emits_short_report(spark, tmp_path):
 def test_greedy_empty_shingle_universe_emits_empty_report(spark, tmp_path):
     """Round-8 ADVICE guard: no doc reaches COVER_NGRAM tokens ->
     empty report with the full 5-column schema, no divide-by-zero."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         greedy_source_coverage,
     )
 
@@ -225,7 +225,7 @@ def test_greedy_fallback_argmax_path_matches_fast_path(
     the cap forced below this corpus's 5 sources, the fallback must
     reproduce the replay — same picks, gains, coverage — proving the
     two paths compute the identical greedy."""
-    import scats_transis_kinesis_spark.plans.pipeline_queries27 as pq27
+    import scats_transis_kinesis_spark.plans.curation as pq27
 
     rows = []
     i = 0

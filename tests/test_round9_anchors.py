@@ -73,7 +73,7 @@ def _replay_covered(docs):
 
 
 def test_exact_substring_cut_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         exact_substring_cut,
     )
 
@@ -105,7 +105,7 @@ def test_exact_substring_cut_replay(spark, tmp_path):
 
 
 def test_exact_substring_cut_savings_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         exact_substring_cut_savings,
     )
 
@@ -208,13 +208,13 @@ def _replay_ivf_audit(vecs, query_ids, probes, k, n_cents):
 
 
 def test_ivf_probe_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
         ivf_probe_recall_audit,
     )
-    from scats_transis_kinesis_spark.plans.extension_queries import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         _SIM_QUERY_IDS,
     )
 
@@ -263,7 +263,7 @@ _SPAN_DOCS = [
 
 
 def test_incremental_span_coverage_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_span_coverage,
     )
 
@@ -303,10 +303,10 @@ def test_incremental_matches_full_recompute_restriction(spark, tmp_path):
     """The merge path == repeated_span_coverage restricted to delta ids
     on the SAME corpus — the maintenance contract stated as an
     equality, not just hand numbers."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         repeated_span_coverage,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_span_coverage,
     )
 

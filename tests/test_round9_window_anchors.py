@@ -40,7 +40,7 @@ def _write_documents(spark, tmp_path, rows):
 
 
 def test_sample_hash_bucket_boundary_and_stability(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.plans.curation import (
         sample_hash_bucket,
     )
 
@@ -71,7 +71,7 @@ def test_sample_hash_bucket_boundary_and_stability(spark, tmp_path):
 
 
 def test_source_cap_drops_hash_max_not_id_max(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         SOURCE_CAP,
         source_cap_sample,
     )
@@ -111,7 +111,7 @@ def _morton(bx: int, by: int, bits: int) -> int:
 
 
 def test_zorder_morton_interleave_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         Z_BITS,
         Z_CODES_PER_FILE,
         zorder_layout_audit,
@@ -165,7 +165,7 @@ def test_zorder_morton_interleave_replay(spark, tmp_path):
 
 
 def test_incremental_merge_keeps_one_sided_groups(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.streaming import (
         incremental_agg_maintenance,
     )
 

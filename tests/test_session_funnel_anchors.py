@@ -44,7 +44,7 @@ def test_sessionize_users_gap_boundary(spark, tmp_path):
     ]
     _write_events(spark, tmp_path, rows)
 
-    from scats_transis_kinesis_spark.plans.relational_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         sessionize_users,
     )
 
@@ -56,7 +56,7 @@ def test_sessionize_users_gap_boundary(spark, tmp_path):
 
 
 def test_session_window_native_gap_boundary(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         SESSION_GAP_MIN,
         session_window_native,
     )
@@ -115,7 +115,7 @@ def test_funnel_depth_requires_in_order_stages(spark, tmp_path):
     ]
     _write_events(spark, tmp_path, rows)
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         funnel_view_click_purchase,
     )
 

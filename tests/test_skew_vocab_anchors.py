@@ -36,7 +36,7 @@ def test_key_skew_matches_replay(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import key_skew_audit
+    from scats_transis_kinesis_spark.plans.storage import key_skew_audit
 
     row = key_skew_audit(spark, str(tmp_path)).collect()[0]
 
@@ -74,7 +74,7 @@ def test_vocab_coverage_pins_tiebreak_at_the_cut(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.text import (
         VOCAB_TOP_NS,
         vocab_coverage_curve,
     )

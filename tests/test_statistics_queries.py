@@ -38,7 +38,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_acf_alternating_series_hits_plus_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         acf_hourly_traffic,
     )
 
@@ -73,7 +73,7 @@ ORDERS_SCHEMA = "o_orderkey long, o_orderdate timestamp, o_totalprice double"
 
 
 def test_ks_offset_staircases_score_half_at_first_value(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         ks_drift_orders,
     )
 
@@ -89,7 +89,7 @@ def test_ks_offset_staircases_score_half_at_first_value(spark, tmp_path):
 
 
 def test_ks_identical_samples_score_zero(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         ks_drift_orders,
     )
 
@@ -105,7 +105,7 @@ def test_ks_identical_samples_score_zero(spark, tmp_path):
 
 
 def test_cusum_locates_level_shift_boundary(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         cusum_changepoint_daily,
     )
 
@@ -125,7 +125,7 @@ def test_cusum_locates_level_shift_boundary(spark, tmp_path):
 
 
 def test_mad_fence_flags_only_the_whale(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         robust_outliers_mad,
     )
 
@@ -158,7 +158,7 @@ def test_mad_fence_flags_only_the_whale(spark, tmp_path):
 
 
 def test_link_prediction_two_basket_graph_by_hand(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         link_prediction_scores,
     )
 
@@ -183,7 +183,7 @@ def test_link_prediction_two_basket_graph_by_hand(spark, tmp_path):
 
 
 def test_zipf_exact_power_law_fits_slope_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.text import (
         zipf_law_fit,
     )
 
@@ -198,7 +198,7 @@ def test_zipf_exact_power_law_fits_slope_minus_one(spark, tmp_path):
 
 
 def test_heaps_all_novel_stream_fits_beta_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.text import (
         heaps_law_fit,
     )
 

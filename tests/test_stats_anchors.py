@@ -40,7 +40,7 @@ def test_kaplan_meier_matches_product_limit_replay(spark, tmp_path):
         rows, "o_custkey long, o_orderdate timestamp"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         kaplan_meier_retention,
     )
 
@@ -85,7 +85,7 @@ def test_cusum_matches_integer_argmax_replay(spark, tmp_path):
         rows, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         cusum_changepoint_daily,
     )
 
@@ -130,7 +130,7 @@ def test_ks_matches_exact_ecdf_replay(spark, tmp_path):
         rows, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         ks_drift_orders,
     )
 
@@ -172,7 +172,7 @@ def test_acf_matches_lag_pairs_replay(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         acf_hourly_traffic,
     )
 

@@ -29,7 +29,7 @@ def test_daily_streaks_by_hand(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         user_daily_streaks,
     )
 
@@ -54,7 +54,7 @@ def test_scd2_intervals_by_hand(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.relational import (
         scd2_customer_orders,
     )
 

@@ -1224,7 +1224,7 @@ def test_incremental_embedding_dedup_matches_batch_lsh(spark, tmp_path):
     from scats_transis_kinesis_spark.operators.dedup import (
         incremental_embedding_dedup,
     )
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         LSH_DUP_THRESHOLD,
         dedup_embedding_lsh,
     )

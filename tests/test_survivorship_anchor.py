@@ -26,7 +26,7 @@ def test_survivorship_rules_on_planted_cluster(spark, tmp_path):
         "c_acctbal double, c_mktsegment string",
     ).write.parquet(f"{tmp_path}/customer.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         survivorship_golden_record,
     )
 

@@ -35,7 +35,7 @@ def test_transition_counts_by_hand(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         event_transition_matrix,
     )
 
@@ -51,7 +51,7 @@ def test_transition_counts_by_hand(spark, tmp_path):
 
 
 def test_heavy_hitters_twopass_is_lossless_at_threshold(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         HH_THRESHOLD,
         heavy_hitters_twopass,
     )

@@ -27,7 +27,7 @@ def test_winsorize_clips_to_exact_interpolated_quantiles(spark, tmp_path):
         "o_totalprice double, o_orderdate timestamp",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         winsorize_order_stats,
     )
 
@@ -66,7 +66,7 @@ def test_gapfill_emits_zero_rows_for_silent_days(spark, tmp_path):
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.timeseries import (
         resample_gapfill_daily,
     )
 

@@ -31,7 +31,7 @@ def test_zorder_files_match_python_morton(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.storage import (
         Z_CODES_PER_FILE,
         zorder_layout_audit,
     )
@@ -66,7 +66,7 @@ def test_source_cap_keep_set_matches_python_hash_order(spark, tmp_path):
         f"{tmp_path}/documents.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
+    from scats_transis_kinesis_spark.plans.curation import (
         SOURCE_CAP,
         source_cap_sample,
     )
