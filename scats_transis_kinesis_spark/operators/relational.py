@@ -562,14 +562,17 @@ def unpack_pair(key: str) -> tuple[Column, Column]:
     return F.shiftright(k, 32), k.bitwiseAND(F.lit((1 << 32) - 1))
 
 
-def _idiv(num: Column, den: Column) -> Column:
-    """Exact floor division on non-negative longs, safe past 2^53:
-    ``num - num % den`` is an exact multiple of ``den`` in int64, so
-    the double division that follows is exact whenever the QUOTIENT
-    fits in 53 bits (every use here bounds it by 1e6·|keys|)."""
-    return ((num - num % den) / den).cast("long")
+def idiv(num: Column | int, den: Column | int) -> Column:
+    """Exact integer division ``num div den``, truncating toward zero.
+
+    Spark's ``div`` keeps the whole computation in int64 (or decimal), so
+    the quotient is exact for every long; division by zero raises under
+    ANSI.  Both operands must be integral or decimal: a double operand is
+    an analysis error, so cast it explicitly first."""
+    return F.call_function("div", F.lit(num), F.lit(den))
 
 
+# Scale of the floor-micros ratio contracts (``idiv(x * MICROS, n)``).
 # Plain int (not F.lit): module import must not require an active
 # SparkContext; Column arithmetic lifts it.
-_M = 1_000_000
+MICROS = 1_000_000

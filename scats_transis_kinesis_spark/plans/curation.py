@@ -74,13 +74,13 @@ from ..functions.hashing import (
     portable_hash64,
 )
 from ..operators.dedup import shingle_sets
-from ..operators.relational import _M, _idiv
+from ..operators.relational import MICROS, idiv
 from ..operators.text import quality_expr, stopword_ratio, tokens
 from ..sources.loaders import load_table
-from .dedup import _H64, EMBED_DUP_THRESHOLD
+from .dedup import EMBED_DUP_THRESHOLD
 from .registry import register
 from .storage import HH_THRESHOLD
-from .text import _STOPLIST_SQL, QUALITY_MIN
+from .text import QUALITY_MIN, STOPLIST_SQL
 
 
 PACK_BUDGET = 1024
@@ -1273,7 +1273,7 @@ PREC_AT_K = 100
                    round(0.4 * least(len(string_split(d.text, ' ')) / 100.0,
                                      1.0)
                          + 0.3 * (len(list_filter(string_split(d.text, ' '),
-                                      t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                                      t -> t IN ({STOPLIST_SQL})))::DOUBLE
                                   / len(string_split(d.text, ' ')))
                          + 0.3 * (1 - length(regexp_replace(lower(d.text),
                                       '[a-z0-9 ]', '', 'g'))::DOUBLE
@@ -1335,7 +1335,7 @@ AUC_BUCKETS = 32
             SELECT round(0.4 * least(len(string_split(text, ' ')) / 100.0,
                                      1.0)
                          + 0.3 * (len(list_filter(string_split(text, ' '),
-                                      t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                                      t -> t IN ({STOPLIST_SQL})))::DOUBLE
                                   / len(string_split(text, ' ')))
                          + 0.3 * (1 - length(regexp_replace(lower(text),
                                       '[a-z0-9 ]', '', 'g'))::DOUBLE
@@ -1468,7 +1468,7 @@ GAINS_BANDS = 32
             SELECT least(floor(round(
                        0.4 * least(len(string_split(text, ' ')) / 100.0, 1.0)
                        + 0.3 * (len(list_filter(string_split(text, ' '),
-                                    t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                                    t -> t IN ({STOPLIST_SQL})))::DOUBLE
                                 / len(string_split(text, ' ')))
                        + 0.3 * (1 - length(regexp_replace(lower(text),
                                     '[a-z0-9 ]', '', 'g'))::DOUBLE
@@ -1771,11 +1771,9 @@ _GAIN_SQL = "CASE lang WHEN 'en' THEN 3 WHEN 'de' THEN 1 ELSE 0 END"
 
 
 def _quality_sql() -> str:
-    from .text import _STOPLIST_SQL
-
     return f"""round(0.4 * least(len(string_split(text, ' ')) / 100.0, 1.0)
          + 0.3 * (len(list_filter(string_split(text, ' '),
-                      t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                      t -> t IN ({STOPLIST_SQL})))::DOUBLE
                   / len(string_split(text, ' ')))
          + 0.3 * (1 - length(regexp_replace(lower(text),
                       '[a-z0-9 ]', '', 'g'))::DOUBLE
@@ -2059,11 +2057,11 @@ def shard_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "same_adjacent",
         F.when(
             F.col("n_adjacent") > 0,
-            _idiv(F.col("same_adjacent") * 1_000_000, F.col("n_adjacent")),
+            idiv(F.col("same_adjacent") * 1_000_000, F.col("n_adjacent")),
         )
         .otherwise(F.lit(0))
         .alias("observed_same_micros"),
-        _idiv(
+        idiv(
             F.col("same_num") * 1_000_000,
             F.col("n_docs") * (F.col("n_docs") - 1),
         ).alias("expected_same_micros"),
@@ -2072,7 +2070,7 @@ def shard_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ratio_micros",
         F.when(
             F.col("expected_same_micros") > 0,
-            _idiv(
+            idiv(
                 F.col("observed_same_micros") * 1_000_000,
                 F.col("expected_same_micros"),
             ),
@@ -2088,7 +2086,7 @@ def shard_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, text,
                    string_split(text, ' ') AS w,
                    len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                       t -> t IN ({STOPLIST_SQL})))::DOUBLE
                        / len(string_split(text, ' ')) AS stop_r,
                    length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))
                        ::DOUBLE / length(text) AS punct_r
@@ -2097,7 +2095,7 @@ def shard_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, stop_r,
                    round(0.4 * least(len(w) / 100.0, 1.0)
                          + 0.3 * stop_r + 0.3 * (1 - punct_r), 6) AS quality,
-                   {_H64.format(e='text')} AS h
+                   {duckdb_hash64_sql('text')} AS h
             FROM t
         ), canon AS (
             SELECT h, min(doc_id) AS keeper FROM scored GROUP BY h
@@ -2175,7 +2173,7 @@ GREEDY_ROUNDS = 4
 
 # Max sources whose bucket sets the greedy may pull to the driver in
 # one action (round-11, VERDICT-r10 item 2/5): caps the driver payload
-# at (CAP + 1) × COVER_BUCKETS ints regardless of |sources|; corpora
+# at CAP × COVER_BUCKETS ints regardless of |sources|; corpora
 # with more sources fall back to per-round argmax collects (bounded
 # per round by construction).  512 × 4096 ≈ 2M ints ≈ tens of MB of
 # Python sets — comfortably inside any driver, far above any curated
@@ -2259,14 +2257,14 @@ def temperature_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("lang_tokens").cast("long").alias("total"),
         F.sum("w").cast("long").alias("sw"),
     )
-    natural = _idiv(F.col("lang_tokens") * _M, F.col("total"))
-    sample = _idiv(F.col("w") * _M, F.col("sw"))
+    natural = idiv(F.col("lang_tokens") * MICROS, F.col("total"))
+    sample = idiv(F.col("w") * MICROS, F.col("sw"))
     return w.crossJoin(F.broadcast(totals)).select(
         "lang",
         "lang_tokens",
         natural.alias("natural_micros"),
         sample.alias("sample_micros"),
-        F.when(natural > 0, _idiv(sample * _M, natural)).alias(
+        F.when(natural > 0, idiv(sample * MICROS, natural)).alias(
             "boost_micros"
         ),
     )
@@ -2379,26 +2377,20 @@ def greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-source bucket sets UNCONDITIONALLY — O(|sources| × 4096) ints
     # on the driver, fine for a curated-dimension source column but a
     # driver OOM on an open-domain corpus with millions of sources.
-    # The one-action fast path survives behind a CONSTANT cap: collect
-    # at most GREEDY_COLLECT_CAP + 1 source rows (driver payload
-    # <= (CAP + 1) × 4096 ints by construction); if the limit probe
-    # shows more sources than the cap, fall back to the round-9 shape —
+    # The one-collect fast path survives behind a CONSTANT cap: a
+    # parallel count of the distinct document sources (a superset of
+    # the sources that own a bucket set, and no collect_set) gates the
+    # collect, so the driver payload is <= CAP × 4096 ints by
+    # construction.  Over the cap, fall back to the round-9 shape —
     # GREEDY_ROUNDS bounded per-round argmax collects over the
     # persisted cover relation (1-row winner + its <= 4096-bucket set
-    # per round), which is constant-bounded in |sources|.
+    # per round), which is constant-bounded in |sources|.  Both paths
+    # emit the same report.
     rep_schema = (
         "sel_round long, source string, gain_buckets long, covered_buckets long"
     )
-    # coalesce(1) keeps the capped probe a ONE-job action: the k-group
-    # final aggregate collapses to a single task (bounded rows by
-    # construction), so CollectLimit's incremental partition scan-up —
-    # which re-ran the final stage across several jobs — never fires.
-    # The map-side partial aggregation stays fully parallel.
-    per_src = (
-        agg.coalesce(1).limit(GREEDY_COLLECT_CAP + 1).collect()
-    )
-    if len(per_src) <= GREEDY_COLLECT_CAP:
-        sets = {r["source"]: set(r["bs"]) for r in per_src}
+    if docs.select("source").distinct().count() <= GREEDY_COLLECT_CAP:
+        sets = {r["source"]: set(r["bs"]) for r in agg.collect()}
         n_universe = len(set().union(*sets.values())) if sets else 0
         if n_universe == 0:
             # Degenerate corpus (no doc reaches COVER_NGRAM tokens):
@@ -2471,7 +2463,7 @@ def greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "gain_buckets",
         "covered_buckets",
-        _idiv(F.col("covered_buckets") * _M, F.lit(n_universe)).alias(
+        idiv(F.col("covered_buckets") * MICROS, F.lit(n_universe)).alias(
             "coverage_micros"
         ),
     )

@@ -62,10 +62,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.hashing import duckdb_hash32_sql, minhash_value_sql, portable_hash32
+from ..functions.hashing import (
+    duckdb_hash32_sql,
+    duckdb_hash64_sql,
+    minhash_value_sql,
+    portable_hash32,
+)
 from ..operators import dedup as D
 from ..operators.dedup import SHINGLE_N, shingle_sets
-from ..operators.relational import _M, _idiv
+from ..operators.relational import MICROS, idiv
 from ..operators.similarity import LSH_BANDS, LSH_BITS, pair_cosine, sign_lsh_pairs
 from ..operators.text import tokens
 from ..sources.loaders import load_table
@@ -73,12 +78,6 @@ from .registry import register
 
 
 # --- oracle SQL builders (mirror the Spark operators exactly) -------------
-_H32 = "(('0x' || substr(md5({e}), 1, 8))::BIGINT)"
-
-
-_H64 = "(('0x' || substr(md5({e}), 1, 15))::BIGINT)"
-
-
 def _minhash_lsh_oracle() -> str:
     mins = ",\n               ".join(
         f"min({minhash_value_sql('h', a, b)}) AS m{i}"
@@ -91,7 +90,7 @@ def _minhash_lsh_oracle() -> str:
         )
         band_rows.append(
             f"SELECT doc_id, {band} AS band, "
-            + _H64.format(e=f"concat_ws(',', {cols})")
+            + duckdb_hash64_sql(f"concat_ws(',', {cols})")
             + " AS bucket FROM sig"
         )
     bands_sql = "\n            UNION ALL\n            ".join(band_rows)
@@ -106,7 +105,7 @@ def _minhash_lsh_oracle() -> str:
         ), tok AS (
             SELECT doc_id, unnest(toks) AS token FROM sets
         ), h AS (
-            SELECT doc_id, {_H32.format(e='token')} AS h FROM tok
+            SELECT doc_id, {duckdb_hash32_sql('token')} AS h FROM tok
         ), sig AS (
             SELECT doc_id,
                {mins}
@@ -141,7 +140,7 @@ def _simhash_oracle() -> str:
         WITH tok AS (
             SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
         ), h AS (
-            SELECT doc_id, {_H32.format(e='token')} AS h FROM tok
+            SELECT doc_id, {duckdb_hash32_sql('token')} AS h FROM tok
         ), s AS (
             SELECT doc_id,
                {bit_sums}
@@ -155,7 +154,7 @@ def _simhash_oracle() -> str:
 @register(
     "dedup_exact",
     oracle=f"""
-        SELECT {_H64.format(e='text')} AS content_hash,
+        SELECT {duckdb_hash64_sql('text')} AS content_hash,
                min(doc_id) AS keep_id,
                count(*) AS n_copies
         FROM documents GROUP BY 1
@@ -747,7 +746,7 @@ SPAN_N = 5
 # Shared oracle CTEs for the repeated-span family (coverage + the
 # round-8 islands extension): t/sh/flat enumerate every SPAN_N-token
 # span with its 1-based position; rep keeps spans in >= 2 documents.
-_SPAN_FLAT_CTES = f"""
+SPAN_FLAT_CTES = f"""
         t AS (
             SELECT doc_id, string_split(text, ' ') AS w,
                    len(string_split(text, ' ')) AS n_toks
@@ -769,7 +768,7 @@ _SPAN_FLAT_CTES = f"""
 """
 
 
-def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+def repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared span machinery for the repeated-substring family: returns
     ``(flat, rep)`` where ``flat`` is one (doc_id, n_toks, pos, g) row
     per {SPAN_N}-token span and ``rep`` is the set of span texts seen in
@@ -825,7 +824,7 @@ def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 @register(
     "repeated_span_coverage",
     oracle=f"""
-        WITH {_SPAN_FLAT_CTES}, covered AS (
+        WITH {SPAN_FLAT_CTES}, covered AS (
             SELECT DISTINCT f.doc_id, f.n_toks, cp.cp
             FROM flat f
             JOIN rep r ON f.g = r.g,
@@ -856,7 +855,7 @@ def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 )
 def repeated_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    flat, rep = _repeated_span_flat(docs)
+    flat, rep = repeated_span_flat(docs)
     cov = (
         flat.join(rep, "g", "left_semi")
         .select(
@@ -989,8 +988,8 @@ def dedup_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_prefix_pairs(load_table(spark, "documents", sf_dir))
 
 
-# Shared by entity_fuzzy_clusters and survivorship_golden_record
-# (pipeline_queries6): the recursive-closure ground truth for the
+# Shared by entity_fuzzy_clusters and survivorship_golden_record:
+# the recursive-closure ground truth for the
 # customer entity clusters, as reusable CTE text ending in a `clusters`
 # CTE of (member_id, cluster_id).
 ER_CLUSTERS_CTES = """
@@ -1696,12 +1695,12 @@ def blocking_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = grp.groupBy("blocking_key").agg(
         F.sum("c").alias("n_rows"),
         F.count("*").alias("ndv"),
-        F.sum(_idiv(F.col("c") * (F.col("c") - 1), F.lit(2))).alias(
+        F.sum(idiv(F.col("c") * (F.col("c") - 1), F.lit(2))).alias(
             "actual_pairs"
         ),
         F.max("c").alias("top_key_size"),
     )
-    est = _idiv(F.col("n_rows") * F.col("n_rows"), 2 * F.col("ndv"))
+    est = idiv(F.col("n_rows") * F.col("n_rows"), 2 * F.col("ndv"))
     return agg.select(
         "blocking_key",
         "n_rows",
@@ -1710,10 +1709,10 @@ def blocking_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         est.alias("est_uniform_pairs"),
         F.when(
             F.col("actual_pairs") > 0,
-            _idiv(F.col("actual_pairs") * 1_000_000, est),
+            idiv(F.col("actual_pairs") * 1_000_000, est),
         ).alias("skew_ratio_micros"),
         "top_key_size",
-        _idiv(F.col("top_key_size") * (F.col("top_key_size") - 1), F.lit(2)).alias(
+        idiv(F.col("top_key_size") * (F.col("top_key_size") - 1), F.lit(2)).alias(
             "top_key_pairs"
         ),
     ).orderBy("blocking_key")
@@ -1729,7 +1728,7 @@ R_BITS = 4
 
 def _lsh_cand_ctes(bands: int, bits: int, prefix: str) -> str:
     """DuckDB CTE pair ``{prefix}buckets`` / ``{prefix}cand`` for a
-    banded sign-LSH layout (mirrors coverage_queries._LSH_PAIRS_CTES,
+    banded sign-LSH layout (mirrors _LSH_PAIRS_CTES above,
     parameterized over the banding)."""
     return f"""
         {prefix}buckets AS (
@@ -1892,10 +1891,10 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_candidates",
         "n_verified",
         F.when(
-            F.col("n_candidates") > 0, _idiv(micros, F.col("n_candidates"))
+            F.col("n_candidates") > 0, idiv(micros, F.col("n_candidates"))
         ).alias("precision_micros"),
         F.when(
-            F.col("n_union") > 0, _idiv(micros, F.col("n_union"))
+            F.col("n_union") > 0, idiv(micros, F.col("n_union"))
         ).alias("union_share_micros"),
     )
 
@@ -1903,7 +1902,7 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "repeated_span_islands",
     oracle=f"""
-        WITH {_SPAN_FLAT_CTES}, occ AS (
+        WITH {SPAN_FLAT_CTES}, occ AS (
             SELECT DISTINCT f.doc_id, f.pos
             FROM flat f JOIN rep r ON f.g = r.g
         ), flagged AS (
@@ -1950,7 +1949,7 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def repeated_span_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    flat, rep = _repeated_span_flat(docs)
+    flat, rep = repeated_span_flat(docs)
     # No .distinct(): flat is one row per (doc_id, pos) BY CONSTRUCTION
     # (the span generator emits each position once), so the semi-join
     # output is already unique — the old distinct was a full extra
@@ -2007,10 +2006,10 @@ def _covered_positions(docs: DataFrame) -> DataFrame:
     repeated-span inventory and the occurrence semi-join consume it —
     without the pin Catalyst shingles the corpus twice (the banding
     audit persist lesson; measured 1.8 -> 1.0 s isolated at sf0.1)."""
-    flat, _ = _repeated_span_flat(docs)
+    flat, _ = repeated_span_flat(docs)
     flat = flat.localCheckpoint(eager=True)
     # min != max over non-null doc_id ⟺ countDistinct >= 2, without the
-    # two-phase distinct expansion (the _repeated_span_flat rationale,
+    # two-phase distinct expansion (the repeated_span_flat rationale,
     # round-11) — here over the checkpointed flat.
     rep = (
         flat.groupBy("g")
@@ -2033,7 +2032,7 @@ def _covered_positions(docs: DataFrame) -> DataFrame:
 @register(
     "exact_substring_cut",
     oracle=f"""
-        WITH {_SPAN_FLAT_CTES}, {_COVERED_CTE}, tok AS (
+        WITH {SPAN_FLAT_CTES}, {_COVERED_CTE}, tok AS (
             SELECT doc_id, n_toks, i, w[i] AS tok
             FROM t, LATERAL (SELECT unnest(generate_series(1, n_toks))
                              AS i) _
@@ -2109,7 +2108,7 @@ def exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "exact_substring_cut_savings",
     oracle=f"""
-        WITH {_SPAN_FLAT_CTES}, {_COVERED_CTE}, covc AS (
+        WITH {SPAN_FLAT_CTES}, {_COVERED_CTE}, covc AS (
             SELECT doc_id, count(*) AS n_cov FROM cov GROUP BY doc_id
         ), d AS (
             SELECT doc_id, source,
@@ -2168,7 +2167,7 @@ def exact_substring_cut_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("n_toks") - F.col("n_cov"))
         .cast("long")
         .alias("kept_tokens"),
-        _idiv(
-            F.sum("n_cov").cast("long") * _M, F.sum("n_toks").cast("long")
+        idiv(
+            F.sum("n_cov").cast("long") * MICROS, F.sum("n_toks").cast("long")
         ).alias("savings_micros"),
     )

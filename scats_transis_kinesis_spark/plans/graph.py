@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import bfs_distances
-from ..operators.relational import _idiv, pack_pair, unpack_pair
+from ..operators.relational import idiv, pack_pair, unpack_pair
 from ..sources.loaders import load_table
 from .registry import register
 
@@ -218,7 +218,7 @@ def ppr_nation_trade_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared CTE text for the 1995 co-purchase graph, used by the triangle,
 # community and association-rule oracles (ONE definition of the date
 # window and basket/edge canonicalization — the Spark twin is
-# _copurchase_lines/_copurchase_edges below).
+# _copurchase_baskets/_copurchase_edges below).
 _COPURCHASE_LINES_CTE = """lines AS (
             SELECT DISTINCT l.l_orderkey AS ok, l.l_partkey AS pk
             FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -284,27 +284,6 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LPA_ROUNDS = 2
-
-
-def _copurchase_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 1995 ``(order, part)`` basket rows — the shared input
-    behind the co-purchase graph and the market-basket queries.
-    Eagerly checkpointed: every consumer reads it at least twice (both
-    sides of a within-basket self-join)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    return (
-        li.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))
-                & (F.col("o_orderdate") < F.lit("1996-01-01").cast("date"))
-            ).select("o_orderkey"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
 
 
 def _copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,6 +653,13 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_MAX_HOPS = 4
 
 
+def _hub(adj: DataFrame) -> int:
+    """The highest-degree ``src`` of a directed edge list, ties to the
+    smallest id — a 1-row argmax collect."""
+    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    return deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
+
+
 @register(
     "copurchase_item_similarity",
     oracle=f"""
@@ -787,9 +773,7 @@ def bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.selectExpr("v AS src", "u AS dst"))
         .localCheckpoint(eager=True)
     )
-    deg = bi.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    hub = deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
-    visited = bfs_distances(bi, hub, BFS_MAX_HOPS)
+    visited = bfs_distances(bi, _hub(bi), BFS_MAX_HOPS)
     return visited.groupBy("hop").agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.sum("v").alias("vertex_checksum"),
@@ -962,14 +946,14 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         amax = araw.agg(F.max("ar").alias("m"))
         auth = araw.crossJoin(F.broadcast(amax)).select(
-            "p", _idiv(F.col("ar") * F.lit(1_000_000), F.col("m")).alias("am")
+            "p", idiv(F.col("ar") * F.lit(1_000_000), F.col("m")).alias("am")
         )
         hraw = ce.join(auth, "p").groupBy("c").agg(
             F.sum("am").cast("long").alias("hr")
         ).localCheckpoint(eager=True)
         hmax = hraw.agg(F.max("hr").alias("m"))
         hub = hraw.crossJoin(F.broadcast(hmax)).select(
-            "c", _idiv(F.col("hr") * F.lit(1_000_000), F.col("m")).alias("hm")
+            "c", idiv(F.col("hr") * F.lit(1_000_000), F.col("m")).alias("hm")
         )
     top_auth = (
         auth.orderBy(F.col("am").desc(), "p")
@@ -1236,13 +1220,13 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pk_b",
             "pk_c",
             "c_abc",
-            _idiv(F.col("c_abc") * m, F.col("n_baskets")).alias(
+            idiv(F.col("c_abc") * m, F.col("n_baskets")).alias(
                 "support_micros"
             ),
-            _idiv(F.col("c_abc") * m, F.col("c_ab")).alias(
+            idiv(F.col("c_abc") * m, F.col("c_ab")).alias(
                 "confidence_micros"
             ),
-            _idiv(
+            idiv(
                 F.col("c_abc") * m * F.col("n_baskets"),
                 F.col("c_ab") * F.col("c"),
             ).alias("lift_micros"),
@@ -1320,7 +1304,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    wexpr = (F.lit(1) + _idiv(F.lit(1_000_000), F.col("c"))).alias("w")
+    wexpr = (F.lit(1) + idiv(F.lit(1_000_000), F.col("c"))).alias("w")
     e = (
         pw.select(F.col("u").alias("src"), F.col("v").alias("dst"), wexpr)
         .unionAll(
@@ -1328,8 +1312,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    hub = deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
+    hub = _hub(e)
     d = (
         e.select(F.col("src").alias("v"))
         .where(F.col("v") == hub)
@@ -1523,7 +1506,7 @@ def local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node",
             "degree",
             F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"),
-            _idiv(
+            idiv(
                 F.coalesce(F.col("triangles"), F.lit(0)) * 2 * F.lit(1_000_000),
                 F.col("degree") * (F.col("degree") - 1),
             ).alias("lcc_micros"),
@@ -1617,7 +1600,7 @@ def modularity_brand_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_vertices",
             d("m").alias("n_edges"),
             d("n_comm").alias("n_communities"),
-            _idiv(d("intra") * 1_000_000, d("m")).alias("intra_share_micros"),
+            idiv(d("intra") * 1_000_000, d("m")).alias("intra_share_micros"),
             F.round(
                 d("intra").cast("double") / d("m")
                 - d("sum_dc2").cast("double") / (F.lit(4.0) * d("m") * d("m")),

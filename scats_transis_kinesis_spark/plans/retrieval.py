@@ -74,7 +74,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as S
 from ..operators.ml import kcenter_centroids, kmeans_centroids
-from ..operators.relational import _M, _idiv
+from ..operators.relational import MICROS, idiv
 from ..operators.similarity import cosine, hard_negative_topk
 from ..operators.text import tokens
 from ..sources.loaders import load_table
@@ -548,7 +548,7 @@ _BM25_DOC = f"""BM25 top-{BM25_TOPK} retrieval (Robertson/Sparck Jones; the
 def bm25_score_frame(docs: DataFrame) -> DataFrame:
     """``(doc_id, score_micros)`` BM25 scores for :data:`BM25_QUERY` —
     the shared scorer behind ``bm25_topk`` and the RRF fusion query
-    (pipeline_queries5).  Only documents with at least one query-term
+    (rrf_fusion_topk).  Only documents with at least one query-term
     hit appear."""
     w = tokens("text")
     # NOT persisted: the tokenized frame feeds both the (n_docs, avgdl)
@@ -609,12 +609,6 @@ HN_QUERY_IDS = (0, 1, 2, 3, 4)
 HN_K = 5
 
 
-_COS6 = (
-    "round(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) "
-    "* sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-
 @register(
     "emb_hard_negatives",
     oracle=f"""
@@ -626,7 +620,7 @@ _COS6 = (
         ), pairs AS (
             SELECT q.query_id, c.vec_id AS negative_id,
                    c.label AS negative_label,
-                   {_COS6.format(a="q.qv", b="c.embedding::DOUBLE[]")}
+                   {_COS.format(a="q.qv", b="c.embedding::DOUBLE[]")}
                        AS cosine_sim
             FROM q JOIN embeddings c ON c.label <> q.qlabel
         )
@@ -1555,8 +1549,8 @@ def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFram
     )
     return ratios.agg(
         F.count("*").alias("n_pairs"),
-        _idiv(F.sum("r_micros"), F.count("*")).alias("mean_ratio_micros"),
-        _idiv(
+        idiv(F.sum("r_micros"), F.count("*")).alias("mean_ratio_micros"),
+        idiv(
             F.sum(
                 F.when(
                     F.abs(F.col("r_micros") - 1_000_000) <= 200_000, 1
@@ -1688,8 +1682,8 @@ def nearest_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best.crossJoin(F.broadcast(maj)).agg(
         F.count("*").alias("n_eval"),
         F.sum(correct).alias("n_correct"),
-        _idiv(F.sum(correct) * 1_000_000, F.count("*")).alias("accuracy_micros"),
-        _idiv(F.first("majority") * 1_000_000, F.count("*")).alias(
+        idiv(F.sum(correct) * 1_000_000, F.count("*")).alias("accuracy_micros"),
+        idiv(F.first("majority") * 1_000_000, F.count("*")).alias(
             "majority_baseline_micros"
         ),
     )
@@ -1841,7 +1835,7 @@ def _ivf_audit_frame(
 ) -> DataFrame:
     """The probe-sweep audit body shared by the seed-quantizer audit
     above and the round-10 trained-quantizer audit
-    (pipeline_queries29.ivf_kmeans_recall_audit): one scored-candidate
+    (ivf_kmeans_recall_audit): one scored-candidate
     frame at max-probe with the centroid rank attached, each probe row
     a FILTER over it.  ``cents`` is any ``(centroid_id, cvec)`` coarse
     quantizer; ``quantizer`` (when set) prepends a literal tag column
@@ -1898,11 +1892,11 @@ def _ivf_audit_frame(
             F.col("nprobe").cast("long").alias("nprobe"),
             "n_candidates",
             F.col("n_hits").cast("long").alias("n_hits"),
-            _idiv(F.col("n_hits") * _M, F.lit(nq * IVF_K)).alias(
+            idiv(F.col("n_hits") * MICROS, F.lit(nq * IVF_K)).alias(
                 "recall_micros"
             ),
-            _idiv(
-                F.col("n_candidates") * _M, F.lit(nq) * (F.col("n") - 1)
+            idiv(
+                F.col("n_candidates") * MICROS, F.lit(nq) * (F.col("n") - 1)
             ).alias("cand_share_micros"),
         )
     )
@@ -2248,8 +2242,8 @@ def ivf_quantizer_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_vectors",
                 "min_cluster",
                 "max_cluster",
-                _idiv(
-                    F.col("max_cluster") * _M * F.col("n_clusters"),
+                idiv(
+                    F.col("max_cluster") * MICROS * F.col("n_clusters"),
                     F.col("n_vectors"),
                 ).alias("imbalance_micros"),
             )
@@ -2381,7 +2375,7 @@ def ivf_quantizer_stability_audit(
     )
 
     def pairs(c: Column) -> Column:
-        return _idiv(c * (c - 1), F.lit(2))
+        return idiv(c * (c - 1), F.lit(2))
 
     mt = cells.agg(
         F.sum(pairs(F.col("nij"))).alias("matched"),
@@ -2401,7 +2395,7 @@ def ivf_quantizer_stability_audit(
         mt.crossJoin(F.broadcast(ta))
         .crossJoin(F.broadcast(tb))
         .withColumn(
-            "tot", _idiv(F.col("n_vectors") * (F.col("n_vectors") - 1), F.lit(2))
+            "tot", idiv(F.col("n_vectors") * (F.col("n_vectors") - 1), F.lit(2))
         )
     )
     d = F.col
@@ -2416,10 +2410,10 @@ def ivf_quantizer_stability_audit(
         "half_pairs",
         F.when(
             d("tot") > 0,
-            _idiv(
+            idiv(
                 (d("matched") + d("tot") - d("full_pairs") - d("half_pairs")
                  + d("matched"))
-                * _M,
+                * MICROS,
                 d("tot"),
             ),
         ).alias("rand_index_micros"),

@@ -121,11 +121,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.hashing import duckdb_hash32_sql, portable_hash32
-from ..operators.relational import _idiv, bucketed_prefix_sums
+from ..operators.relational import bucketed_prefix_sums, idiv
 from ..sources.loaders import ensure_parallelism, load_table
 from .probes import probe_min_max
 from .registry import register
-from .text import _STOPLIST_SQL
+from .text import STOPLIST_SQL
 
 
 @register(
@@ -911,7 +911,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def step(acc, x):
         n_risk = acc["at"]
-        s2 = _idiv(acc["s"] * (n_risk - x["d"]), n_risk)
+        s2 = idiv(acc["s"] * (n_risk - x["d"]), n_risk)
         row = F.struct(
             x["dur"].alias("duration_weeks"),
             n_risk.alias("n_risk"),
@@ -1102,7 +1102,7 @@ def welch_t_test_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         "n",
         "s",
-        _idiv(F.col("s"), F.col("n")).alias("mf"),
+        idiv(F.col("s"), F.col("n")).alias("mf"),
         (F.col("s") % F.col("n")).alias("r"),
     )
     q = (
@@ -1246,7 +1246,7 @@ def anova_f_priority_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         "n",
         "s",
-        _idiv(F.col("s"), F.col("n")).alias("mf"),
+        idiv(F.col("s"), F.col("n")).alias("mf"),
         (F.col("s") % F.col("n")).alias("r"),
     )
     q = (
@@ -1463,7 +1463,7 @@ def spearman_daily_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH pred AS (
             SELECT lang AS true_lang,
                    CASE WHEN len(list_filter(string_split(text, ' '),
-                            t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                            t -> t IN ({STOPLIST_SQL})))::DOUBLE
                             / len(string_split(text, ' ')) > 0.05
                         THEN 'en' ELSE 'und' END AS lang_guess
             FROM documents
@@ -1544,7 +1544,7 @@ def lang_id_agreement_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def pairs(c: Column) -> Column:
-        return _idiv(c * (c - 1), F.lit(2))
+        return idiv(c * (c - 1), F.lit(2))
 
     mt = cells.agg(
         F.sum(pairs(F.col("nij"))).alias("matched"),
@@ -1563,7 +1563,7 @@ def lang_id_agreement_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (
         mt.crossJoin(F.broadcast(ta))
         .crossJoin(F.broadcast(tb))
-        .withColumn("tot", _idiv(F.col("n_docs") * (F.col("n_docs") - 1), F.lit(2)))
+        .withColumn("tot", idiv(F.col("n_docs") * (F.col("n_docs") - 1), F.lit(2)))
     )
     d = F.col
     exp_idx = d("true_pairs").cast("double") * d("pred_pairs") / d("tot")
@@ -1579,22 +1579,22 @@ def lang_id_agreement_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pred_pairs",
         F.when(
             d("pred_pairs") > 0,
-            _idiv(d("matched") * 1_000_000, d("pred_pairs")),
+            idiv(d("matched") * 1_000_000, d("pred_pairs")),
         ).alias("precision_micros"),
         F.when(
             d("true_pairs") > 0,
-            _idiv(d("matched") * 1_000_000, d("true_pairs")),
+            idiv(d("matched") * 1_000_000, d("true_pairs")),
         ).alias("recall_micros"),
         F.when(
             d("true_pairs") + d("pred_pairs") > 0,
-            _idiv(
+            idiv(
                 2 * d("matched") * 1_000_000,
                 d("true_pairs") + d("pred_pairs"),
             ),
         ).alias("f1_micros"),
         F.when(
             d("tot") > 0,
-            _idiv(
+            idiv(
                 (d("matched") + d("tot") - d("true_pairs") - d("pred_pairs")
                  + d("matched"))
                 * 1_000_000,
@@ -1762,7 +1762,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("wv") < 0, -1).otherwise(1)
                 * F.when(
                     F.col("mx") > 0,
-                    _idiv(F.abs(F.col("wv")) * 1000, F.col("mx")),
+                    idiv(F.abs(F.col("wv")) * 1000, F.col("mx")),
                 ).otherwise(F.lit(0))
             ).cast("long").alias("vv"),
         )
@@ -1777,7 +1777,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     den = v.agg(F.sum(F.col("vv") * F.col("vv")).alias("dd"))
     tr = c.where(F.col("i") == F.col("j")).agg(F.sum("cv").alias("tv"))
-    lam = _idiv(F.col("a"), F.col("dd"))
+    lam = idiv(F.col("a"), F.col("dd"))
     return (
         v.crossJoin(F.broadcast(num))
         .crossJoin(F.broadcast(den))
@@ -1786,7 +1786,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("i").alias("dim"),
             F.col("vv").alias("loading_milli"),
             lam.alias("lambda_milli"),
-            _idiv(lam * 1_000_000, F.col("tv")).alias("evr_micros"),
+            idiv(lam * 1_000_000, F.col("tv")).alias("evr_micros"),
         )
         .orderBy("dim")
     )
@@ -2099,7 +2099,7 @@ def pav_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "band",
             "n",
-            _idiv(F.col("pos") * 1_000_000, F.col("n")).alias("rate_micros"),
+            idiv(F.col("pos") * 1_000_000, F.col("n")).alias("rate_micros"),
             F.round(1_000_000 * F.col("fitted")).cast("long").alias("iso_micros"),
         )
         .orderBy("band")
@@ -2211,7 +2211,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cal = sc.where(F.col("part") == 1).select("vec_id", "score")
     nk = cal.agg(
         F.count("*").alias("n_cal"),
-        _idiv(9 * (F.count("*") + 1) + 9, F.lit(10)).alias("k"),
+        idiv(9 * (F.count("*") + 1) + 9, F.lit(10)).alias("k"),
     )
     # Hierarchical k-th order statistic: bucket by range, prefix-count,
     # rank only inside the bucket that contains rank k.
@@ -2262,7 +2262,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qhat",
         "n_test",
         "covered",
-        _idiv(F.col("covered") * 1_000_000, F.col("n_test")).alias(
+        idiv(F.col("covered") * 1_000_000, F.col("n_test")).alias(
             "coverage_micros"
         ),
         F.lit(900_000).cast("long").alias("target_micros"),
@@ -2444,10 +2444,6 @@ def decision_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ARMS: tuple[str, ...] = ("click", "purchase", "view")  # sorted arm ids
 
 
-def _policy_sql(arm_expr: str) -> str:
-    return arm_expr
-
-
 @register(
     "bandit_replay_evaluation",
     oracle=f"""
@@ -2533,7 +2529,7 @@ def bandit_replay_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
         choice.groupBy("policy")
         .agg(
             F.sum(matched).alias("n_matched"),
-            _idiv(F.sum(matched) * 1_000_000, F.count("*")).alias(
+            idiv(F.sum(matched) * 1_000_000, F.count("*")).alias(
                 "match_rate_micros"
             ),
             # A policy that matches zero logged events has no defined
@@ -2541,7 +2537,7 @@ def bandit_replay_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # of leaking an engine-dependent divide-by-zero.
             F.when(
                 F.sum(matched) > 0,
-                _idiv(
+                idiv(
                     F.sum(
                         F.when(
                             F.col("arm") == F.col("chosen"), F.col("reward_c")
@@ -2626,10 +2622,10 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "n_h",
-            _idiv(F.col("w_micros") * 1_000_000, F.col("tw")).alias(
+            idiv(F.col("w_micros") * 1_000_000, F.col("tw")).alias(
                 "share_micros"
             ),
-            _idiv(F.col("w_micros") * _NEYMAN_BUDGET, F.col("tw")).alias(
+            idiv(F.col("w_micros") * _NEYMAN_BUDGET, F.col("tw")).alias(
                 "alloc_floor"
             ),
         )
@@ -2795,7 +2791,7 @@ def fdr_bh_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("zv", 6).alias("z_stat"),
             F.col("p_micros").alias("p_cheb_micros"),
             F.col("rnk").alias("p_rank"),
-            _idiv(F.lit(_BH_ALPHA_MICROS) * F.col("rnk"), F.col("m")).alias(
+            idiv(F.lit(_BH_ALPHA_MICROS) * F.col("rnk"), F.col("m")).alias(
                 "bh_cut_micros"
             ),
             (F.col("rnk") <= F.col("rstar")).alias("rejected"),

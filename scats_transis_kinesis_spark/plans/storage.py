@@ -73,7 +73,7 @@ from ..operators.bloom import (
     bloom_probe,
     build_bloom_words,
 )
-from ..operators.relational import _idiv
+from ..operators.relational import idiv
 from ..sources.loaders import load_table
 from ..streaming.pipeline import PSI_SMOOTH as DRIFT_SMOOTH
 from .probes import probe_min_max
@@ -1049,7 +1049,7 @@ def rle_compression_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "col_name",
         "n_rows",
         "n_runs",
-        _idiv(F.col("n_rows") * F.lit(1_000_000), F.col("n_runs")).alias(
+        idiv(F.col("n_rows") * F.lit(1_000_000), F.col("n_runs")).alias(
             "rle_ratio_micros"
         ),
     ).orderBy("col_name")
@@ -1144,8 +1144,8 @@ def bloom_filter_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((F.col("m_bits").cast("double") / F.col("ndv")) * F.log(F.lit(2.0)))
         .cast("long")
         .alias("k_hashes"),
-        _idiv(F.col("m_bits") * 1000, F.col("ndv")).alias("bits_per_key_milli"),
-        _idiv(F.col("m_bits"), F.lit(8192)).alias("kib"),
+        idiv(F.col("m_bits") * 1000, F.col("ndv")).alias("bits_per_key_milli"),
+        idiv(F.col("m_bits"), F.lit(8192)).alias("kib"),
     ).orderBy("col_name", "fpp_label")
 
 
@@ -1213,7 +1213,7 @@ def compaction_coalesce_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.sum("n_chars").alias("bytes"))
     tot = sizes.agg(
         F.greatest(
-            _idiv(F.sum("bytes") + (_COMPACT_GROUPS - 1), F.lit(_COMPACT_GROUPS)),
+            idiv(F.sum("bytes") + (_COMPACT_GROUPS - 1), F.lit(_COMPACT_GROUPS)),
             F.lit(1),
         ).alias("target")
     )
@@ -1229,7 +1229,7 @@ def compaction_coalesce_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = cum.crossJoin(F.broadcast(tot)).select(
         "shard",
         "bytes",
-        _idiv(F.col("cum_before"), F.col("target")).alias("group_id"),
+        idiv(F.col("cum_before"), F.col("target")).alias("group_id"),
         "target",
     )
     return (
@@ -1239,7 +1239,7 @@ def compaction_coalesce_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bytes").alias("group_bytes"),
             F.min("shard").alias("first_shard"),
             F.max("shard").alias("last_shard"),
-            _idiv(F.sum("bytes") * 1_000_000, F.first("target")).alias(
+            idiv(F.sum("bytes") * 1_000_000, F.first("target")).alias(
                 "fill_micros"
             ),
         )
@@ -1249,9 +1249,6 @@ def compaction_coalesce_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- equi-depth histogram ------------------------------------------------------
 _HIST_BUCKETS = 32
-
-
-_HIST_DECILES = tuple(range(1, 10))
 
 
 @register(
@@ -1333,7 +1330,7 @@ def equidepth_histogram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nn))
         .select(
             "decile",
-            _idiv(F.col("decile") * F.col("n") + 9, F.lit(10)).alias("k"),
+            idiv(F.col("decile") * F.col("n") + 9, F.lit(10)).alias("k"),
         )
     )
     return (
@@ -1415,7 +1412,7 @@ def feature_hashing_collision_audit(
         "n_terms",
         "occupied",
         (F.col("n_terms") - F.col("occupied")).alias("n_collided"),
-        _idiv(
+        idiv(
             (F.col("n_terms") - F.col("occupied")) * 1_000_000,
             F.col("n_terms"),
         ).alias("collision_rate_micros"),
@@ -1593,11 +1590,11 @@ def selectivity_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pred",
             F.col("plo").alias("lo_dollars"),
             F.col("phi").alias("hi_dollars"),
-            _idiv(F.col("est_micro_rows"), F.lit(1_000_000)).alias("est_rows"),
+            idiv(F.col("est_micro_rows"), F.lit(1_000_000)).alias("est_rows"),
             "actual_rows",
             F.when(
                 F.col("actual_rows") > 0,
-                _idiv(
+                idiv(
                     F.abs(
                         F.col("est_micro_rows")
                         - F.col("actual_rows") * 1_000_000
@@ -1700,7 +1697,7 @@ def dictionary_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ndv",
         "entropy_micro_bits",
         dict_bits.alias("dict_bits"),
-        _idiv(F.col("entropy_micro_bits"), dict_bits).alias(
+        idiv(F.col("entropy_micro_bits"), dict_bits).alias(
             "entropy_vs_dict_micros"
         ),
     ).orderBy("col_name")

@@ -36,13 +36,17 @@ replay the delta as micro-batches through ``foreachBatch`` with an
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash64
+from ..functions.hashing import duckdb_hash64_sql, portable_hash64
 from ..operators.text import tokens
 from ..sources.loaders import load_table
-from .dedup import _H64, _SPAN_FLAT_CTES, SPAN_N, _repeated_span_flat
+from .dedup import SPAN_FLAT_CTES, SPAN_N, repeated_span_flat
 from .registry import register
 
 
@@ -108,10 +112,10 @@ SPAN_DELTA_MOD = 5
 
 
 # The full-recompute-restricted-to-delta oracle, shared with the
-# round-10 streaming twin (pipeline_queries29): the batch merge and the
+# streaming twin (incremental_span_coverage_stream): the batch merge and the
 # foreachBatch-maintained state table answer to the SAME contract.
 SPAN_INCR_ORACLE = f"""
-        WITH {_SPAN_FLAT_CTES}, covered AS (
+        WITH {SPAN_FLAT_CTES}, covered AS (
             SELECT DISTINCT f.doc_id, f.n_toks, cp.cp
             FROM flat f
             JOIN rep r ON f.g = r.g,
@@ -134,7 +138,7 @@ SPAN_INCR_ORACLE = f"""
 def _span_inventory(flat: DataFrame) -> DataFrame:
     """The state-table unit both incremental twins maintain: per-span
     distinct-doc counts.  ONE definition shared by the batch merge
-    below and the round-10 streaming twin (pipeline_queries29) — the
+    below and the streaming twin (_span_coverage_stream) — the
     twins answer to the SAME oracle, so their inventory must be
     structurally identical by construction, not by convention."""
     return flat.groupBy("g").agg(
@@ -166,8 +170,8 @@ def _span_inventory(flat: DataFrame) -> DataFrame:
 def incremental_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
-    base_flat, _ = _repeated_span_flat(docs.where(~is_delta))
-    delta_flat, _ = _repeated_span_flat(docs.where(is_delta))
+    base_flat, _ = repeated_span_flat(docs.where(~is_delta))
+    delta_flat, _ = repeated_span_flat(docs.where(is_delta))
     # Yesterday's materialized state: built once from base positions
     # and pinned — the refresh below never re-reads base_flat.
     base_inv = _span_inventory(base_flat).localCheckpoint(eager=True)
@@ -217,6 +221,38 @@ def incremental_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_STREAM_BATCHES = 3
 
 
+def _replay_available_now(
+    delta: DataFrame,
+    n_batches: int,
+    absorb: Callable[[DataFrame, int], None],
+) -> None:
+    """Replay the ``(doc_id, text)`` delta as ``n_batches`` file-source
+    micro-batches: stage it to parquet in ``n_batches`` files, read it
+    back one file per trigger, run ``foreachBatch(absorb)`` under an
+    ``availableNow`` trigger until the files are drained, then drop the
+    staging directory.  ``absorb`` must checkpoint whatever state it
+    keeps (lineage cut): the staged files are gone once this returns."""
+    spark = delta.sparkSession
+    tmp = tempfile.mkdtemp(prefix="replay_")
+    try:
+        data_dir = f"{tmp}/delta"
+        delta.repartition(n_batches, "doc_id").write.parquet(data_dir)
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
+        )
+        query = (
+            stream.writeStream.foreachBatch(absorb)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 # --- streaming twin of incremental span coverage ----------------------------
 def _span_coverage_stream(
     spark: SparkSession, sf_dir: str, n_batches: int
@@ -224,15 +260,12 @@ def _span_coverage_stream(
     """The foreachBatch state-table maintenance behind
     incremental_span_coverage_stream, with the micro-batch count
     exposed so the split-invariance test can sweep it."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
 
     # Yesterday's materialized state: the base corpus's span inventory,
     # built once and pinned — base POSITIONS are never read again.
-    base_flat, _ = _repeated_span_flat(docs.where(~is_delta))
+    base_flat, _ = repeated_span_flat(docs.where(~is_delta))
     state = {
         "inv": _span_inventory(base_flat).localCheckpoint(eager=True),
         "flat": None,
@@ -250,7 +283,7 @@ def _span_coverage_stream(
         # pattern): the state-merge job below reads flat through
         # _span_inventory and materializes the checkpoint on the way —
         # one job per batch instead of two, same cut.
-        flat, _ = _repeated_span_flat(batch_df)
+        flat, _ = repeated_span_flat(batch_df)
         flat = flat.localCheckpoint(eager=False)
         state["flat"] = (
             flat
@@ -265,31 +298,9 @@ def _span_coverage_stream(
             .localCheckpoint(eager=True)
         )
 
-    tmp = tempfile.mkdtemp(prefix="span_stream_")
-    try:
-        data_dir = f"{tmp}/delta"
-        (
-            docs.where(is_delta)
-            .select("doc_id", "text")
-            .repartition(n_batches, "doc_id")
-            .write.parquet(data_dir)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(absorb)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        # Everything the result depends on is checkpointed (lineage
-        # cut), so the staging dir can go before the caller collects.
-        shutil.rmtree(tmp, ignore_errors=True)
+    _replay_available_now(
+        docs.where(is_delta).select("doc_id", "text"), n_batches, absorb
+    )
 
     rep = state["inv"].where(F.col("nd") >= 2).select("g")
     delta_flat = state["flat"]
@@ -368,9 +379,6 @@ def _dedup_state_stream(
     """The foreachBatch state-table maintenance behind
     incremental_exact_dedup_stream, with the micro-batch count exposed
     so the split-invariance test can sweep it."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
 
@@ -416,31 +424,9 @@ def _dedup_state_stream(
         )
         state["agg"] = merged.localCheckpoint(eager=True)
 
-    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
-    try:
-        data_dir = f"{tmp}/delta"
-        (
-            docs.where(is_delta)
-            .select("doc_id", "text")
-            .repartition(n_batches, "doc_id")
-            .write.parquet(data_dir)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(absorb)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        # Everything the result depends on is checkpointed (lineage
-        # cut), so the staging dir can go before the caller collects.
-        shutil.rmtree(tmp, ignore_errors=True)
+    _replay_available_now(
+        docs.where(is_delta).select("doc_id", "text"), n_batches, absorb
+    )
 
     agg = state["agg"]
     if agg is None:  # no delta docs at all
@@ -461,10 +447,10 @@ def _dedup_state_stream(
     "incremental_exact_dedup_stream",
     oracle=f"""
         WITH delta AS (
-            SELECT doc_id, {_H64.format(e="text")} AS content_hash
+            SELECT doc_id, {duckdb_hash64_sql("text")} AS content_hash
             FROM documents WHERE doc_id % {SPAN_DELTA_MOD} = 0
         ), base AS (
-            SELECT DISTINCT {_H64.format(e="text")} AS content_hash
+            SELECT DISTINCT {duckdb_hash64_sql("text")} AS content_hash
             FROM documents WHERE doc_id % {SPAN_DELTA_MOD} <> 0
         ), g AS (
             SELECT content_hash, min(doc_id) AS keep_id,

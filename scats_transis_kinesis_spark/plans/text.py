@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import duckdb_hash64_sql
 from ..operators import multimodal as M
 from ..operators import text as X
 from ..operators.dedup import SHINGLE_N, shingle_sets
@@ -32,11 +33,10 @@ from ..operators.multimodal import extract_features, sample_frames
 from ..operators.relational import bucketed_prefix_sums
 from ..operators.text import EN_STOPWORDS, tokens
 from ..sources.loaders import load_table
-from .dedup import _H64
 from .registry import register
 
 
-_STOPLIST_SQL = ", ".join(f"'{w}'" for w in X.EN_STOPWORDS)
+STOPLIST_SQL = ", ".join(f"'{w}'" for w in X.EN_STOPWORDS)
 
 
 # --- text analysis --------------------------------------------------------
@@ -63,7 +63,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, text,
                    string_split(text, ' ') AS w,
                    len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                       t -> t IN ({STOPLIST_SQL})))::DOUBLE
                        / len(string_split(text, ' ')) AS stop_r,
                    length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))::DOUBLE
                        / length(text) AS punct_r
@@ -89,7 +89,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH t AS (
             SELECT doc_id,
                    len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                       t -> t IN ({STOPLIST_SQL})))::DOUBLE
                        / len(string_split(text, ' ')) AS r
             FROM documents
         )
@@ -107,8 +107,8 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_fingerprint",
     oracle=f"""
         SELECT doc_id,
-               {_H64.format(e='text')} AS fp,
-               {_H64.format(e=("trim(regexp_replace(regexp_replace(lower(text), "
+               {duckdb_hash64_sql('text')} AS fp,
+               {duckdb_hash64_sql(("trim(regexp_replace(regexp_replace(lower(text), "
                                "'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"))} AS fp_norm
         FROM documents
     """,
@@ -376,14 +376,12 @@ QUALITY_MIN = 0.5
 def _corpus_clean_oracle() -> str:
     # Composed from the text_lang_id / text_quality / dedup_exact oracle
     # logic — same stoplist, same formulas, same portable hash family.
-    from .dedup import _H64
-
     return f"""
         WITH t AS (
             SELECT doc_id, n_chars, text,
                    string_split(text, ' ') AS w,
                    len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                       t -> t IN ({STOPLIST_SQL})))::DOUBLE
                        / len(string_split(text, ' ')) AS stop_r,
                    length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))::DOUBLE
                        / length(text) AS punct_r
@@ -398,7 +396,7 @@ def _corpus_clean_oracle() -> str:
         ),
         keep AS (
             SELECT min(doc_id) AS doc_id
-            FROM (SELECT doc_id, {_H64.format(e='text')} AS h FROM documents)
+            FROM (SELECT doc_id, {duckdb_hash64_sql('text')} AS h FROM documents)
             GROUP BY h
         )
         SELECT s.doc_id, s.n_chars, s.quality
@@ -1395,7 +1393,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH pred AS (
             SELECT doc_id, lang AS true_lang,
                    CASE WHEN len(list_filter(string_split(text, ' '),
-                            t -> t IN ({_STOPLIST_SQL})))::DOUBLE
+                            t -> t IN ({STOPLIST_SQL})))::DOUBLE
                             / len(string_split(text, ' ')) > 0.05
                         THEN 'en' ELSE 'und' END AS lang_guess
             FROM documents

@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.relational import _idiv, bucketed_prefix_sums
+from ..operators.relational import bucketed_prefix_sums, idiv
 from ..sources.loaders import load_table
 from ..streaming.stateful import DECAY_HORIZON
 from .registry import register
@@ -1217,8 +1217,6 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..operators.relational import _idiv
-
     w = W.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     nw = W.partitionBy("c_nationkey")
     base = load_table(spark, "customer", sf_dir).select(
@@ -1233,11 +1231,11 @@ def window_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_nationkey",
         F.when(
             F.col("n") > 1,
-            _idiv((F.col("rn") - 1) * 1_000_000, F.col("n") - 1),
+            idiv((F.col("rn") - 1) * 1_000_000, F.col("n") - 1),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("balance_pct_rank_micros"),
-        _idiv(F.col("rn") * 1_000_000, F.col("n")).alias("balance_cume_micros"),
+        idiv(F.col("rn") * 1_000_000, F.col("n")).alias("balance_cume_micros"),
         "balance_decile",
     )
 
@@ -1516,19 +1514,19 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |types|-bounded — pin them once; the iteration itself is broadcast
     # arithmetic over the checkpoints.
     pm = tc.join(rt, "prev").select(
-        "prev", "nxt", _idiv(F.col("c") * F.lit(1_000_000), F.col("tot")).alias("p")
+        "prev", "nxt", idiv(F.col("c") * F.lit(1_000_000), F.col("tot")).alias("p")
     ).localCheckpoint(eager=True)
     st = events.select(
         F.col("event_type").alias("s")
     ).distinct().localCheckpoint(eager=True)
     k = st.agg(F.count(F.lit(1)).cast("long").alias("kk"))
     v = st.crossJoin(F.broadcast(k)).select(
-        "s", _idiv(F.lit(1_000_000), F.col("kk")).alias("vm")
+        "s", idiv(F.lit(1_000_000), F.col("kk")).alias("vm")
     )
     for _ in range(MARKOV_ROUNDS):
         terms = v.join(F.broadcast(pm), v.s == pm.prev).select(
             F.col("nxt").alias("s2"),
-            _idiv(F.col("vm") * F.col("p"), F.lit(1_000_000)).alias("term"),
+            idiv(F.col("vm") * F.col("p"), F.lit(1_000_000)).alias("term"),
         )
         sums = terms.groupBy("s2").agg(F.sum("term").cast("long").alias("vm2"))
         v = st.join(F.broadcast(sums), st.s == sums.s2, "left").select(
@@ -1894,7 +1892,7 @@ def forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("d") + F.col("k")).alias("d"), "c")
         .groupBy("d")
         .agg(
-            _idiv(F.sum("c") * F.lit(1_000_000), F.lit(7)).alias("pred_micros"),
+            idiv(F.sum("c") * F.lit(1_000_000), F.lit(7)).alias("pred_micros"),
             F.count("*").alias("n_src"),
         )
         .where(F.col("n_src") == 7)
@@ -1929,16 +1927,16 @@ def forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "ne",
         F.when(
-            F.col("ne") > 0, _idiv(F.col("s_naive"), F.col("ne"))
+            F.col("ne") > 0, idiv(F.col("s_naive"), F.col("ne"))
         ).alias("naive_mae"),
     )
-    mae = F.when(F.col("ne") > 0, _idiv(F.col("se"), F.col("ne")))
+    mae = F.when(F.col("ne") > 0, idiv(F.col("se"), F.col("ne")))
     return rows.select(
         "method",
         mae.alias("mae_micros"),
         F.when(
             F.col("naive_mae") > 0,
-            _idiv(mae * F.lit(1_000_000), F.col("naive_mae")),
+            idiv(mae * F.lit(1_000_000), F.col("naive_mae")),
         ).alias("mase_micros"),
     ).orderBy("method")
 
@@ -2046,7 +2044,7 @@ def event_regex_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.select(
         "pattern",
         "n_sessions",
-        _idiv(F.col("n_sessions") * F.lit(1_000_000), F.col("total")).alias(
+        idiv(F.col("n_sessions") * F.lit(1_000_000), F.col("total")).alias(
             "pct_micros"
         ),
     ).orderBy("pattern")

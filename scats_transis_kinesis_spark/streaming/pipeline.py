@@ -205,7 +205,7 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None, ts_col: str =
 
 
 # PSI smoothing pseudo-count: keeps an emptied bucket's log-ratio
-# finite.  THE single definition — plans/pipeline_queries6 imports it
+# finite.  THE single definition — plans/storage.py imports it
 # as DRIFT_SMOOTH, so the batch/stream drift contract cannot drift.
 PSI_SMOOTH = 0.5
 

@@ -131,7 +131,7 @@ def site_liveness(
 
 # --- streaming decayed counters (the decayed_hourly_traffic twin) --------
 
-# hours; THE single definition — plans/pipeline_queries5 imports it, so
+# hours; THE single definition — plans/timeseries.py imports it, so
 # the batch/stream parity contract cannot drift.
 DECAY_HORIZON = 20
 

@@ -532,3 +532,17 @@ def test_bucketed_prefix_sums_matches_global_scan(spark):
     for i, (k, a, b) in enumerate(sorted(rows), start=1):
         ca, cb = ca + a, cb + b
         assert got[k] == (i, ca, cb), k
+
+
+def test_idiv_is_exact_past_2_pow_53(spark):
+    """Integer division stays in int64: a quotient past 2^53 (where a
+    double rounds 2^53 + 1 down to 2^53) comes back exact, and division
+    truncates toward zero like SQL ``div``."""
+    from scats_transis_kinesis_spark.operators.relational import idiv
+
+    big = (1 << 53) + 1
+    df = spark.createDataFrame(
+        [(big, 1), (big * 3, 3), (-7, 2), (7, 2)], "num long, den long"
+    )
+    got = [r["q"] for r in df.select(idiv(F.col("num"), F.col("den")).alias("q")).collect()]
+    assert got == [big, big, -3, 3]

@@ -71,3 +71,19 @@ def test_bench_headline_names_resolve():
     unknown = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not unknown, f"bench HEADLINE names not in REGISTRY: {unknown}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench entries"
+
+
+def test_surface_order_names_every_query_once():
+    """queries() order is one complete data list: every registered query
+    appears in it exactly once and it names no unknown query, so the
+    order never falls back to module import order."""
+    from collections import Counter
+
+    from scats_transis_kinesis_spark.plans.registry import _PRIORITY
+
+    twice = [n for n, c in Counter(_PRIORITY).items() if c > 1]
+    assert not twice, f"listed more than once: {twice}"
+    unknown = sorted(set(_PRIORITY) - set(REGISTRY))
+    assert not unknown, f"order list names unknown queries: {unknown}"
+    unlisted = sorted(set(REGISTRY) - set(_PRIORITY))
+    assert not unlisted, f"registered but not in the order list: {unlisted}"
